@@ -42,7 +42,7 @@ def sources(root):
 def stamp_of(files):
     h = hashlib.sha256()
     for f in files:
-        h.update(str(f).encode())
+        h.update(str(f.resolve()).encode())
         h.update(f.read_bytes())
     return h.hexdigest()
 

@@ -55,16 +55,18 @@ def check_pipeline(ops, passes, url_lists, batch_size):
 
 
 def check_queries(ops, digests):
+    """Every query op, prime and timed, against the recorded row count and
+    digest."""
     bad = thrown(ops)
     for o in ops:
-        if o["phase"] != "prime" or o["id"] in bad:
+        if o["id"] in bad:
             continue
         want = digests.get(o["name"])
         if want is None:
             bad[o["id"]] = "no recorded digest"
         elif o["facts"]["rows"] != want["rows"]:
             bad[o["id"]] = f"rows {o['facts']['rows']} != {want['rows']}"
-        elif not want.get("rows_only") and o["facts"]["digest"] != want["digest"]:
+        elif o["facts"]["digest"] != want["digest"]:
             bad[o["id"]] = "digest differs"
     return bad
 

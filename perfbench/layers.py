@@ -101,9 +101,8 @@ def compute(result, workload):
     rows = [op_row(o, spans, counters) for o in traced]
     m = {name: 0.0 for name, _ in METRICS}
 
-    setups = result["setup"]
     for k in ("start_s", "tables_s", "warmup_s"):
-        m[f"session.{k}"] = median(s[k] for s in setups)
+        m[f"session.{k}"] = result["setup"][k]
     prime = [o for o in ops if o["phase"] == "prime"]
     m["session.prime_s"] = sum(o["end"] - o["start"] for o in prime) / 1e3
 

@@ -38,9 +38,10 @@ import layers  # noqa: E402
 import stats  # noqa: E402
 
 E2E = [("setup_s", "s"), ("wall_s", "s"), ("rows_per_s", "rows/s"),
-       ("op_p50_s", "s"), ("op_tail_s", "s"), ("peak_rss_mb", "MB")]
+       ("op_p50_s", "s"), ("op_tail_s", "s"), ("peak_rss_mb", "MB"),
+       ("live_heap_mb", "MB")]
 
-# op_tail_s percentile. A run holds 8-10 unit ops (the run-time budget:
+# op_tail_s percentile. A run holds 10 unit ops (the run-time budget:
 # 48 runs in 3420 s), too few for a percentile with 10 samples beyond it.
 TAIL_P = 90
 
@@ -78,8 +79,8 @@ def make_config(args, spec, run_dir, fixture, tiny):
     common = spec["common"]
     cfg = {"workload": args.workload, "seed": args.seed, "trace": bool(args.trace),
            "corrupt": args.corrupt, "fixture": str(fixture.resolve()),
-           "tiny": str(tiny.resolve()), "setup_rounds": common["setup_rounds"],
-           "warmup_query": common["warmup_query"], "op_timeout_s": common["op_timeout_s"]}
+           "tiny": str(tiny.resolve()), "warmup_query": common["warmup_query"],
+           "op_timeout_s": common["op_timeout_s"]}
     expect = {}
     w = spec[args.workload]
     # a traced run times untraced, traced, untraced passes (Harness.tracePass)
@@ -100,6 +101,8 @@ def make_config(args, spec, run_dir, fixture, tiny):
 
 
 def run_jvm(classes, run_dir, heap, timeout):
+    """Run the benchmark JVM; it times its set-up from the launch time
+    passed to it."""
     jars = build.spark_jars()
     # a fixed-size heap takes the collector's heap-growth timing out of
     # peak_rss_mb (it moved the peak by ~20% between identical runs)
@@ -114,6 +117,7 @@ def run_jvm(classes, run_dir, heap, timeout):
             str(run_dir.resolve())]
     (run_dir / "tmp").mkdir()
     with open(run_dir / "jvm.log", "w") as log:
+        cmd.append(str(int(time.time() * 1000)))
         proc = subprocess.Popen(cmd, cwd=run_dir, stdout=log, stderr=subprocess.STDOUT)
         try:
             code = proc.wait(timeout=timeout)
@@ -128,8 +132,13 @@ def e2e_metrics(result, workload, spec):
     """End-to-end metrics and the timed ops behind op_p50/op_tail."""
     ops = result["ops"]
     passes = [p for p in result["passes"] if p["phase"] == "timed"]
-    m = {"setup_s": stats.median(s["total_s"] for s in result["setup"]),
-         "peak_rss_mb": result["peak_rss_mb"]}
+    # set-up: launch of the JVM until the first timed op is ready (the
+    # session, tables, warm-up query and the cold prime pass)
+    first = min(o["start"] for o in ops if o["phase"] == "timed" and o["kind"] != "file")
+    live = [o["live_heap_mb"] for o in ops if o["live_heap_mb"]]
+    live.append(result["extra"].get("ingest_live_heap_mb", 0.0))
+    m = {"setup_s": (first - result["setup"]["launch_ms"]) / 1e3,
+         "peak_rss_mb": result["peak_rss_mb"], "live_heap_mb": max(live)}
     if workload == "pipeline":
         unit = [o for o in ops if o["phase"] == "timed" and o["kind"] == "batch"]
         m["wall_s"] = stats.median(p["wall_s"] for p in passes)
@@ -182,13 +191,11 @@ def main():
     classes = build.ensure(root)
     fixture, tiny = ensure_fixture(out, spec["common"])
 
-    launch = time.time()
     run_dir = out / "runs" / f"{args.workload}-s{args.seed}-{os.getpid()}"
     shutil.rmtree(run_dir, ignore_errors=True)
     run_dir.mkdir(parents=True)
     try:
         cfg, expect = make_config(args, spec, run_dir, fixture, tiny)
-        cfg["launch_ms"] = int(launch * 1000)
         (run_dir / "config.json").write_text(json.dumps(cfg))
         code = run_jvm(classes, run_dir, spec["common"]["jvm_heap"],
                        spec["common"]["jvm_timeout_s"])

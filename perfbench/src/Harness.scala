@@ -6,8 +6,9 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.{GraftSession, SparkEntry, Tables}
@@ -21,12 +22,12 @@ import graft.streaming.EventStreams
   * directory. It judges nothing — `run.py` checks the recorded facts
   * and computes every metric.
   *
-  *     Harness <run-dir>    (reads <run-dir>/config.json)
+  *     Harness <run-dir> <launch-ms>    (reads <run-dir>/config.json)
   *
   * Every op is timed around the public call alone. The op's output
   * facts are read, and its temp dirs, cached frames and persistent RDDs
-  * released, after the timed window closes; `pins_left` is counted
-  * before anything is released.
+  * released, after the timed window closes; `pins_left` and the live
+  * heap are measured before anything is released.
   */
 object Harness {
   private val om = new ObjectMapper()
@@ -36,14 +37,14 @@ object Harness {
     var start = 0L; var end = 0L; var due = 0L
     var buildStart = 0L; var buildEnd = 0L
     var ok = true; var error: String = null
-    var pinsLeft = 0; var pinsMb = 0.0
+    var pinsLeft = 0; var pinsMb = 0.0; var liveHeapMb = 0.0
     var codegenClasses = 0L; var codegenMs = 0.0
     val facts = mutable.LinkedHashMap.empty[String, Any]
     def toMap: Map[String, Any] = Map("id" -> id, "kind" -> kind,
       "name" -> name, "phase" -> phase, "pass" -> pass, "start" -> start,
       "end" -> end, "due" -> due, "build_start" -> buildStart,
       "build_end" -> buildEnd, "ok" -> ok, "error" -> error,
-      "pins_left" -> pinsLeft, "pins_mb" -> pinsMb,
+      "pins_left" -> pinsLeft, "pins_mb" -> pinsMb, "live_heap_mb" -> liveHeapMb,
       "codegen_classes" -> codegenClasses, "codegen_ms" -> codegenMs,
       "facts" -> facts.toMap)
   }
@@ -84,10 +85,11 @@ object Harness {
 
     /** Time `body` as one op. Exceptions fail the op, never the run; an
       * op still running after `op_timeout_s` has its jobs cancelled and
-      * fails as timed out.
+      * fails as timed out. With `sampleHeap` the live heap is measured
+      * after the window, before any clean-up.
       */
-    def op(kind: String, name: String, phase: String, pass: Int)(
-        body: Op => Unit): Op = {
+    def op(kind: String, name: String, phase: String, pass: Int,
+        sampleHeap: Boolean)(body: Op => Unit): Op = {
       nextId += 1
       val o = new Op(nextId, kind, name, phase, pass)
       val sc = spark.sparkContext
@@ -116,6 +118,7 @@ object Harness {
       val heldIds = held.keySet
       o.pinsMb = sc.getRDDStorageInfo.filter(i => heldIds.contains(i.id))
         .map(i => i.memSize + i.diskSize).sum / 1e6
+      if (sampleHeap) o.liveHeapMb = liveHeapMb()
       ops += o
       o
     }
@@ -126,6 +129,31 @@ object Harness {
       spark.catalog.clearCache()
       dirs.foreach(deleteTree)
     }
+  }
+
+  /** Heap still reachable after a full collection, in MiB: what the
+    * program retains (cached blocks, pinned frames, driver state), not
+    * what its allocation stream has touched. Collections 150 ms apart
+    * repeat until one frees less than 1 MiB (at most five): a collection
+    * queues the weak references of Spark's `ContextCleaner`, which polls
+    * its queue every 100 ms and then drops the shuffle and broadcast
+    * state that the next collection frees; and objects another thread (a
+    * stream trigger, a listener) holds only for a moment do not count.
+    */
+  def liveHeapMb(): Double = {
+    val heap = java.lang.management.ManagementFactory.getMemoryMXBean
+    def collect(): Double = { System.gc(); heap.getHeapMemoryUsage.getUsed / 1048576.0 }
+    var last = collect()
+    var rounds = 1
+    var freed = Double.MaxValue
+    while (rounds < 5 && freed >= 1.0) {
+      Thread.sleep(150)
+      val next = collect()
+      freed = last - next
+      last = math.min(last, next)
+      rounds += 1
+    }
+    last
   }
 
   def deleteTree(dir: String): Unit = {
@@ -144,15 +172,12 @@ object Harness {
 
   // ------------------------------------------------------------- set-up
 
-  /** One set-up round: session, table registration, warm-up query on
-    * the tiny fixture. Round 0 is timed from process launch.
+  /** Set-up, timed from the launch of the JVM: session, table
+    * registration, warm-up query on the tiny fixture. The workload's
+    * prime pass follows; `setup_s` runs until the first timed op starts.
     */
-  private def setup(r: Run, round: Int, launchMs: Long): Map[String, Any] = {
-    val t0 = if (round == 0) launchMs else r.now
-    if (r.spark != null) {
-      r.spark.stop()
-      SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
-    }
+  private def setup(r: Run, launchMs: Long): Map[String, Any] = {
+    val t0 = launchMs
     r.spark = GraftSession.local("perfbench")
     r.spark.sparkContext.setLogLevel("ERROR")
     val t1 = r.now
@@ -164,7 +189,7 @@ object Harness {
     SparkEntry.queries(r.cfg.get("warmup_query").asText)(r.spark,
       r.cfg.get("tiny").asText).write.format("noop").mode("overwrite").save()
     val t3 = r.now
-    Map("start_s" -> (t1 - t0) / 1e3, "tables_s" -> (t2 - t1) / 1e3,
+    Map("launch_ms" -> t0, "start_s" -> (t1 - t0) / 1e3, "tables_s" -> (t2 - t1) / 1e3,
       "warmup_s" -> (t3 - t2) / 1e3, "total_s" -> (t3 - t0) / 1e3)
   }
 
@@ -175,7 +200,7 @@ object Harness {
     val base = s"${r.runDir}/pipe/$phase-$pass"
     val cfg = Enricher.Config(backoffMs = 1)
     val fetcher = () => new SyntheticFetcher
-    val canary = r.op("canary", "canary", phase, pass) { o =>
+    val canary = r.op("canary", "canary", phase, pass, phase == "timed") { o =>
       val (ok, avg) = Pipelines.canary(r.spark, urls, s"$base/canary",
         fetcher, p.get("canary_records").asInt, cfg)
       o.facts ++= Seq("accepted" -> ok, "avg_s" -> avg)
@@ -191,7 +216,9 @@ object Harness {
     var failed = false
     while (!failed && cur.hasMore && cur.totalProcessed < nUrls) {
       val before = cur
-      val o = r.op("batch", s"batch$batch", phase, pass) { _ =>
+      // batches repeat the same work: the pass's last one samples the heap
+      val last = cur.totalProcessed + p.get("batch_size").asInt >= nUrls
+      val o = r.op("batch", s"batch$batch", phase, pass, phase == "timed" && last) { _ =>
         cur = Pipelines.processor(r.spark, urls, s"$base/out", fetcher,
           p.get("batch_size").asInt, cursorPath, nUrls, enrichConfig = cfg)
       }
@@ -210,7 +237,7 @@ object Harness {
       Statistics.listParquetFilesRaw(r.spark, s"$base/out/shards").headOption
         .foreach(f => Files.deleteIfExists(Paths.get(new java.net.URI(f._1))))
     }
-    val agg = r.op("aggregate", "aggregator", phase, pass) { o =>
+    val agg = r.op("aggregate", "aggregator", phase, pass, phase == "timed") { o =>
       val st = Pipelines.aggregator(r.spark, s"$base/out/shards", s"$base/agg")
       o.facts("total_records") = st.totalRecords
     }
@@ -265,23 +292,40 @@ object Harness {
     (row.getLong(0), cols.mkString("|"))
   }
 
-  private def queryOp(r: Run, name: String, phase: String, pass: Int): Op =
-    r.op("query", name, phase, pass) { o =>
+  /** One query op: build the DataFrame and collect its rows. The rows
+    * the timed execution returned are digested after the window closes,
+    * so every op, prime or timed, has its output checked.
+    */
+  private def queryOp(r: Run, name: String, phase: String, pass: Int,
+      sampleHeap: Boolean): Op = {
+    var out: Array[Row] = null
+    var schema: StructType = null
+    val o = r.op("query", name, phase, pass, sampleHeap) { o =>
       o.buildStart = r.now
       val df = SparkEntry.queries(name)(r.spark, r.fixture)
       o.buildEnd = r.now
-      if (phase == "prime") {
-        val (rows, d) = digest(if (r.corrupt) df.union(df.limit(1)) else df)
-        o.facts ++= Seq("rows" -> rows, "digest" -> d)
-      } else df.write.format("noop").mode("overwrite").save()
+      schema = df.schema
+      out = df.collect()
     }
+    if (out != null) {
+      // --corrupt: deliberately damage the output, one duplicated row
+      val rows = if (r.corrupt) out ++ out.take(1) else out
+      val (n, d) = digest(r.spark.createDataFrame(rows.toSeq.asJava, schema))
+      o.facts ++= Seq("rows" -> n, "digest" -> d)
+    }
+    o
+  }
 
   private def queryPasses(r: Run, names: Seq[String], passes: Int): Unit = {
-    names.foreach { n => queryOp(r, n, "prime", 0); r.release() }
+    names.foreach { n => queryOp(r, n, "prime", 0, sampleHeap = false); r.release() }
     (0 until passes).foreach { pass =>
       r.tracePass(pass)
       val ps = r.now
-      val ids = names.map { n => val o = queryOp(r, n, "timed", pass); r.release(); o }
+      // every pass runs the same queries: the last one samples the heap
+      val ids = names.map { n =>
+        val o = queryOp(r, n, "timed", pass, sampleHeap = pass == passes - 1)
+        r.release(); o
+      }
       r.passes += Map("kind" -> "queries", "phase" -> "timed", "pass" -> pass,
         "wall_s" -> ids.map(o => (o.end - o.start) / 1e3).sum,
         "clock_s" -> (r.now - ps) / 1e3, "op_ids" -> ids.map(_.id))
@@ -353,6 +397,8 @@ object Harness {
     gen.join(5000)
     val progress = q.recentProgress.map(Tracer.progressMap).toVector
     val failure = q.exception.map(_.getMessage)
+    // what the idle stream retains: its state, corpus and key reads
+    r.extra("ingest_live_heap_mb") = liveHeapMb()
     q.stop()
     r.ingestPhase = Some(Tracer.OpRec(-1, t0, r.now))
     val fileBatch = committedFiles(chk)
@@ -447,8 +493,7 @@ object Harness {
     val runDir = args(0)
     val cfg = om.readTree(new java.io.File(s"$runDir/config.json"))
     val r = new Run(cfg, runDir)
-    val setups = (0 until cfg.get("setup_rounds").asInt)
-      .map(i => setup(r, i, cfg.get("launch_ms").asLong))
+    val setups = setup(r, args(1).toLong)
     cfg.get("workload").asText match {
       case "pipeline" => pipeline(r)
       case "curation" => curation(r)

@@ -132,12 +132,11 @@ class PipelineCheckTest(unittest.TestCase):
 
 
 class QueryCheckTest(unittest.TestCase):
-    digests = {"q1": {"rows": 3, "digest": "a:3:123"},
-               "q2": {"rows": 5, "digest": "x", "rows_only": True}}
+    digests = {"q1": {"rows": 3, "digest": "a:3:123"}}
 
-    def test_matching_digest_passes_and_later_passes_are_not_rechecked(self):
+    def test_matching_digests_pass(self):
         ops = [op(1, "query", "prime", rows=3, digest="a:3:123"),
-               op(2, "query", "timed")]
+               op(2, "query", "timed", rows=3, digest="a:3:123")]
         ops[0]["name"] = ops[1]["name"] = "q1"
         self.assertEqual(checks.check_queries(ops, self.digests), {})
 
@@ -149,10 +148,13 @@ class QueryCheckTest(unittest.TestCase):
         bad = checks.check_queries(ops, self.digests)
         self.assertEqual(set(bad), {1, 2})
 
-    def test_rows_only_query_ignores_digest(self):
-        ops = [op(1, "query", "prime", rows=5, digest="other")]
-        ops[0]["name"] = "q2"
-        self.assertEqual(checks.check_queries(ops, self.digests), {})
+    def test_timed_pass_output_is_checked(self):
+        ops = [op(1, "query", "prime", rows=3, digest="a:3:123"),
+               op(2, "query", "timed", rows=3, digest="a:3:123"),
+               op(3, "query", "timed", rows=3, digest="a:3:124")]
+        for o in ops:
+            o["name"] = "q1"
+        self.assertEqual(set(checks.check_queries(ops, self.digests)), {3})
 
     def test_unrecorded_query_fails(self):
         ops = [op(1, "query", "prime", rows=5, digest="d")]
