@@ -208,8 +208,7 @@ object ScaleProbe {
     // inherits it; production scales cells ∝ √N (per-cell size √N, so
     // nprobe fixed ⇒ candidates/query √N) — the *_sqrtcells case below.
     def pqCase(dir: String, tag: String, cells: Int,
-        queries: DataFrame = fixedQueries,
-        prunedStore: Boolean = false): Double = {
+        queries: DataFrame = fixedQueries): Double = {
       val emb = Tables.embeddings(spark, dir)
       val centroids = Similarity.ivfCentroids(emb, "vec_id", "embedding",
         cells)
@@ -219,27 +218,14 @@ object ScaleProbe {
           "embedding", cbs)
         .select(col("vec_id"), col("pq_code"), col("vnorm"),
           col("centroid_id"))
-      if (prunedStore) {
-        // round-12 serving layout: codes prefix-partitioned by
-        // centroid_id, the probe states its cells' prefix set as a
-        // partition filter — directories outside it are never listed
-        val codesDir = s"$scratch/pq_codes_$tag"
-        graft.io.Layouts.writePrefixPartitioned(codesDf, codesDir,
-          "centroid_id", prefixes = 64)
-        timeMin(Similarity.pqAdcTopKBatchPruned(
-          emb, codesDir, "vec_id", "embedding",
-          queries, "vec_id", "embedding", k = 5, cbs, centroids,
-          nprobe = 4, prefixes = 64))
-      } else {
-        val tPq = s"graft_probe_pq_$tag"
-        graft.io.Layouts.replaceBucketed(codesDf, tPq, "centroid_id", parts)
-        val pq = timeMin(Similarity.pqAdcTopKBatchWithCodes(
-          emb, spark.table(tPq), "vec_id", "embedding",
-          queries, "vec_id", "embedding", k = 5, cbs, centroids,
-          nprobe = 4))
-        spark.sql(s"DROP TABLE IF EXISTS $tPq")
-        pq
-      }
+      val tPq = s"graft_probe_pq_$tag"
+      graft.io.Layouts.replaceBucketed(codesDf, tPq, "centroid_id", parts)
+      val pq = timeMin(Similarity.pqAdcTopKBatchWithCodes(
+        emb, spark.table(tPq), "vec_id", "embedding",
+        queries, "vec_id", "embedding", k = 5, cbs, centroids,
+        nprobe = 4))
+      spark.sql(s"DROP TABLE IF EXISTS $tPq")
+      pq
     }
 
     // discarded warmup over the fixed-side fixtures: the first measured
@@ -253,7 +239,7 @@ object ScaleProbe {
     // serve, this is the realistic second-decade PQ growth number.
     // The two full count() scans run only when a case needs them.
     val needSqrt = wanted("pq_serve_sqrtcells") ||
-      wanted("pq_serve_small_batch") || wanted("pq_serve_pruned")
+      wanted("pq_serve_small_batch")
     val sqrtCells =
       if (!needSqrt) 16
       else {
@@ -272,23 +258,12 @@ object ScaleProbe {
       pqCase(dir1, "d", cells = 16, queries = small))
     val pqSmall2 = ifWanted("pq_serve_small_batch")(
       pqCase(dir2, "e", cells = sqrtCells, queries = small))
-    // the round-12 pruned-store twin of pq_serve_sqrtcells: same fixed
-    // 200-query batch, same √N cell sizing, codes prefix-partitioned —
-    // growth ≤ the candidates-only model (√factor) is the pass
-    // condition, the unpruned codes-scan term having been the round-11
-    // residual (4.04× measured vs 3.16× modeled per decade)
-    val pqPruned1 = ifWanted("pq_serve_pruned")(
-      pqCase(dir1, "f", cells = 16, prunedStore = true))
-    val pqPruned2 = ifWanted("pq_serve_pruned")(
-      pqCase(dir2, "g", cells = sqrtCells, prunedStore = true))
     val mm2 = m2 +
       ("pq_serve_sqrtcells" -> pqSqrt) +
-      ("pq_serve_small_batch" -> pqSmall2) +
-      ("pq_serve_pruned" -> pqPruned2)
+      ("pq_serve_small_batch" -> pqSmall2)
     val base = m1 +
       ("pq_serve_sqrtcells" -> m1("pq_serve_fixed")) +
-      ("pq_serve_small_batch" -> pqSmall1) +
-      ("pq_serve_pruned" -> pqPruned1)
+      ("pq_serve_small_batch" -> pqSmall1)
     val cases = mm2.keys.toSeq.sorted.map { k =>
       val (a, b) = (base(k), mm2(k))
       val g = if (a > 0 && b > 0) b / a else -1.0

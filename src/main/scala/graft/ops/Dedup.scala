@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   *  - MinHash-LSH shuffles once on (band, bandKey); candidate
   *    verification joins only within buckets. Degenerate buckets (mass
   *    duplication of one document) grow quadratically — cap them with
-  *    [[lshCandidates]]' `maxBucket` before pairing.
+  *    [[minhashNearDups]]' `maxBucket` before pairing.
   *  - everything is built-in expressions (codegen'd); signatures are
   *    computed scan-side so the shuffle carries only (id, keys).
   */
@@ -392,47 +392,6 @@ object Dedup {
         col("__bk.key").as("key") +: carry.map(c => col(c._1)): _*)
   }
 
-  /** Candidate near-duplicate pairs from MinHash-LSH banding.
-    *
-    * @param df        input with an id column and a text column
-    * @param maxBucket safety cap: buckets larger than this are dropped
-    *                  (mass-duplicate clusters explode quadratically; at
-    *                  100 TB they must be handled by exact dedup first)
-    * @param md5Basis  use md5-derived MinHash values and raw signature
-    *                  slices as band keys — identical plan shape (one
-    *                  (band, key) shuffle of ids, capped buckets, inline
-    *                  pair emission) but every value is reproducible in
-    *                  the DuckDB oracle, so the LSH pipeline itself can
-    *                  be hash-checked (q52). Default xxh64 basis is the
-    *                  faster production path.
-    * @return (idA, idB) with idA < idB, distinct
-    */
-  def lshCandidates(df: DataFrame, idCol: String, textCol: String,
-      numHashes: Int = 64, bands: Int = 4,
-      maxBucket: Int = 1000, md5Basis: Boolean = false): DataFrame = {
-    val keyed = bandedKeys(spread(df), idCol, textCol, numHashes, bands, md5Basis)
-    // One shuffle: gather each bucket's ids, emit its pairs inline —
-    // no second pass over the keyed exchange and no per-bucket sort, as
-    // a windowed-count + self-join formulation would need. Buckets are
-    // capped, so the pair expansion per group is bounded; over-cap drops
-    // bump CapMetrics accumulators — never silent.
-    // size >= 2 runs FIRST (codegen'd): the singleton majority never pays
-    // the counting UDF, and drop counts are unchanged for any cap >= 2
-    // (an over-cap bucket always passes size >= 2)
-    val buckets = CapMetrics.cappedWhere(
-        keyed.groupBy(col("band"), col("key"))
-          .agg(collect_list(col("__id")).as("__ids"))
-          .where(size(col("__ids")) >= 2),
-        "lsh_candidates", size(col("__ids")), maxBucket, memberRows = false)
-    buckets
-      .select(explode(flatten(transform(col("__ids"), (x, i) =>
-        transform(slice(col("__ids"), i + 2, size(col("__ids"))),
-          y => struct(least(x, y).as("idA"), greatest(x, y).as("idB"))))))
-        .as("__p"))
-      .select(col("__p.idA"), col("__p.idB"))
-      .distinct()
-  }
-
   /** MinHash-LSH near-duplicate pairs, verified with exact Jaccard on the
     * token sets so the output is deterministic given the banding config.
     *
@@ -450,6 +409,17 @@ object Dedup {
     * cross-band distinct, so the dedup exchange carries only survivors.
     * A pair colliding in two bands evaluates the kernel twice — same
     * arrays, bitwise-identical double — which the distinct collapses.
+    *
+    * @param maxBucket safety cap: buckets larger than this are dropped
+    *                  and counted under the `lsh_candidates` CapMetrics
+    *                  tag (mass-duplicate clusters explode
+    *                  quadratically; at 100 TB they must be handled by
+    *                  exact dedup first)
+    * @param md5Basis  use md5-derived MinHash values and raw signature
+    *                  slices as band keys — identical plan shape, but
+    *                  every value is reproducible in the DuckDB oracle,
+    *                  so the LSH pipeline itself can be hash-checked
+    *                  (q52). The default xxh64 basis is faster.
     */
   def minhashNearDups(df: DataFrame, idCol: String, textCol: String,
       threshold: Double, numHashes: Int = 64, bands: Int = 4,
@@ -472,8 +442,9 @@ object Dedup {
     val keyed = bandedKeys(spread(df), idCol, textCol, numHashes, bands,
       md5Basis, carry = Seq("__toks" ->
         graftFn("graft_token_hashes", TextAnalysis.tokens(col(textCol)))))
-    // same bucket cap + accumulator accounting (and the same
-    // "lsh_candidates" CapMetrics tag) as lshCandidates: the size >= 2
+    // One shuffle: gather each bucket's members, emit its pairs inline.
+    // Over-cap buckets are dropped and counted under the
+    // "lsh_candidates" CapMetrics tag — never silent. The size >= 2
     // filter runs first (codegen'd) so the singleton majority never pays
     // the counting UDF, and drop counts are unchanged for any cap >= 2.
     // maxBucket is the legitimate->pathological bucket-size boundary; a
@@ -553,20 +524,12 @@ object Dedup {
     * already probe-ready. Append new survivors' keys after each batch
     * to keep it current.
     *
-    * Store layout (round-12 decision, `bench_history/
-    * r12_layout_shootout.json`): the single recommended format is
-    * [[graft.io.Layouts.writePrefixPartitioned]] over `key` — the only
-    * layout that also serves the partition-pruned small-batch probes
-    * ([[incrementalNearDupsPruned]]: 1.08×/decade vs 3×-slower full
-    * scans at the third decade), at a measured ≤ ~1.3× cost on
-    * saturating-batch full scans. Bucketing
-    * (`Layouts.writeBucketed(keys, t, "band", N, "key")`) buys nothing
-    * structural for the probe — the stored side is semi-joined against
-    * a BROADCAST of batch keys, so no exchange exists to elide — and
-    * the r11 "bucketed 2× slower at sf10" reading did not reproduce
-    * under the interleaved sbt harness (a tie; measurement artifact).
-    * Deployments that only ever run saturating probes may keep plain
-    * parquet.
+    * Store layout: plain parquet, the table the keyed ingest gates
+    * append to. The probe semi-joins the stored table against a
+    * BROADCAST of the batch's keys, so bucketing
+    * (`Layouts.writeBucketed(keys, t, "band", N, "key")`) has no
+    * exchange to elide there; it pays only where the stored table is
+    * shuffle-joined on (band, key) (LayoutsSpec pins that plan).
     */
   def corpusBandKeys(corpus: DataFrame, idCol: String, textCol: String,
       numHashes: Int = 16, bands: Int = 8, maxBucket: Int = 10000,
@@ -609,8 +572,7 @@ object Dedup {
 
   /** Candidate generation of the keyed probe: semi-join the stored key
     * table down to the batch's (band, key) set, re-cap the probed
-    * sliver, join back to batch keys — shared by the full-scan and the
-    * prefix-pruned probe forms.
+    * sliver, join back to batch keys.
     */
   private def probeCandidates(batchKeys0: DataFrame, corpusKeys: DataFrame,
       idCol: String, maxBucket: Int): DataFrame = {
@@ -663,94 +625,6 @@ object Dedup {
         graftFn("graft_jaccard_sorted", col("__ta"), col("__tb"))
           .as("jaccard"))
       .where(col("jaccard") >= threshold)
-  }
-
-  /** [[incrementalNearDupsWithKeys]] against PREFIX-PARTITIONED stores
-    * (the [[graft.io.Layouts.writePrefixPartitioned]] layout: key table
-    * partitioned by a hash prefix of `key`, corpus by a hash prefix of
-    * `idCol`). The probe collects its band-key prefix set and then its
-    * candidate-id prefix set DRIVER-SIDE — each bounded by `prefixes`
-    * values, never by data size — and states them as `__pfx isin (...)`
-    * filters, so Hive partition pruning reads only the matching
-    * directories of both stores. This removes the full-scan floor the
-    * round-11 third-decade probe measured (~0.3 s per 5M docs
-    * single-node, linear in corpus size — the dominant keyed-probe term
-    * at the fourth decade) for SMALL batches, the serving regime; a
-    * batch whose keys cover every prefix degrades gracefully to the
-    * full scan. Match semantics are identical to the unpruned probe
-    * (spec-pinned, incl. the cap accounting).
-    *
-    * Two bounded driver actions run eagerly (the prefix collections);
-    * the batch-key frame is persisted across them and left for the
-    * ContextCleaner like the other operators' small pins. Both store
-    * reads go through [[graft.io.Layouts.readPrefixPruned]], which
-    * REQUIRES the stores' recorded prefix modulus to equal `prefixes` —
-    * a writer/reader mismatch would silently drop matching rows.
-    */
-  def incrementalNearDupsPruned(batch: DataFrame, keysDir: String,
-      corpusDir: String, idCol: String, textCol: String,
-      threshold: Double, numHashes: Int = 16, bands: Int = 8,
-      prefixes: Int = 256, maxBucket: Int = 10000,
-      md5Basis: Boolean = false): DataFrame = {
-    val spark = batch.sparkSession
-    val batchKeys = pinSmall(bandedKeys(spread(batch), idCol, textCol,
-        numHashes, bands, md5Basis)
-      .select(col("__id").as("idA"), col("band"), col("key")))
-    val keyPfx = batchKeys
-      .select(graft.io.Layouts.prefixOf(col("key"), prefixes).as("p"))
-      .distinct().collect().map(_.getLong(0)).toSeq
-    val cands = pinSmall(probeCandidates(batchKeys,
-        graft.io.Layouts.readPrefixPruned(spark, keysDir, keyPfx, prefixes),
-        idCol, maxBucket))
-    val idPfx = cands
-      .select(graft.io.Layouts.prefixOf(col("idB"), prefixes).as("p"))
-      .distinct().collect().map(_.getLong(0)).toSeq
-    verifyJaccardCandidates(batch, cands,
-      graft.io.Layouts.readPrefixPruned(spark, corpusDir, idPfx, prefixes),
-      idCol, textCol, threshold)
-  }
-
-  /** AUTO-DISPATCHED incremental near-dup probe over STORED tables
-    * (round-13 task 4): picks [[incrementalNearDupsPruned]] or the
-    * full-scan [[incrementalNearDupsWithKeys]] from FS metadata alone
-    * — [[graft.io.Layouts.prunedDispatch]] reads each store's prefix
-    * marker and on-disk byte total; the pruned arm runs only when both
-    * stores are prefix-partitioned with one modulus AND their combined
-    * size reaches `pruneMinStoreBytes`. The r12 crossover probe
-    * (`bench_history/r12_crossover.json`) showed CORPUS SCALE, not
-    * batch size or prefix coverage, picks the winning arm: below the
-    * threshold the pruned probe's fixed cost (two eager driver prefix
-    * collections + per-prefix listings on two stores) exceeds the
-    * whole full-scan floor at every batch size; above it the pruned
-    * arm won at every batch size including 94% prefix coverage — so
-    * the dispatcher keys on store bytes with batch shape ignored.
-    * Match semantics identical between arms (spec-pinned); a plain
-    * (unstamped) store pair always takes the full-scan arm, so the
-    * dispatcher is safe to adopt as the single serving entry.
-    */
-  def incrementalNearDupsAuto(batch: DataFrame, keysDir: String,
-      corpusDir: String, idCol: String, textCol: String,
-      threshold: Double, numHashes: Int = 16, bands: Int = 8,
-      maxBucket: Int = 10000, md5Basis: Boolean = false,
-      pruneMinStoreBytes: Long =
-        graft.io.Layouts.DefaultPruneMinStoreBytes): DataFrame = {
-    val spark = batch.sparkSession
-    graft.io.Layouts.prunedDispatchCached(spark, Seq(keysDir, corpusDir),
-        pruneMinStoreBytes) match {
-      case Some(prefixes) =>
-        incrementalNearDupsPruned(batch, keysDir, corpusDir, idCol,
-          textCol, threshold, numHashes, bands, prefixes, maxBucket,
-          md5Basis)
-      case None =>
-        // whole-store read; __pfx (present on a prefix store read
-        // below its byte threshold, absent on a plain store) is
-        // dropped either way — drop() of a missing column is a no-op
-        incrementalNearDupsWithKeys(batch,
-          spark.read.parquet(keysDir).drop(graft.io.Layouts.PrefixCol),
-          spark.read.parquet(corpusDir).drop(graft.io.Layouts.PrefixCol),
-          idCol, textCol, threshold, numHashes, bands, maxBucket,
-          md5Basis)
-    }
   }
 
   /** Exact blocked near-dup: all pairs within a blocking key above a
@@ -1059,7 +933,7 @@ object Dedup {
     * map-side-combined by the distinct — then every aggregate is
     * per-key group sets (≤ |groups| entries) and the |groups|²-sized
     * report. Pair emission reuses the in-bucket explode of
-    * [[lshCandidates]]; group sets are sorted so `source_a < source_b`
+    * [[minhashNearDups]]; group sets are sorted so `source_a < source_b`
     * deterministically.
     *
     * @return `source_a, source_b, n_common, n_a, n_b, jaccard` — counts
@@ -1201,17 +1075,15 @@ object Dedup {
       md5Basis: Boolean = false): DataFrame = {
     val truth = blockedJaccardPairs(
       df.withColumn("__blk", lit(1)), idCol, textCol, "__blk", threshold)
-    // ONE banded pass serves both counters (r14): the candidate set and
-    // the detected set used to be two full pipelines (lshCandidates +
-    // minhashNearDups — bandedKeys, bucket groupBy and pair explode each
-    // ran twice). Set-identical to the two-pipeline form: candidates =
-    // distinct scored pairs (jaccard is functionally determined by the
-    // pair), detected = the threshold filter of the same distinct set
-    // (filter-before- vs after-distinct commute). r15: both counters
-    // fold into ONE aggregation pass (count + conditional count), so the
-    // pair-proportional frame is referenced once — no pin (the r14 pin
-    // violated pinSmall's batch-proportional contract: 15.9M pairs from
-    // 100k docs at 20× replicas) and no second counting pass.
+    // ONE banded pass serves both counters: candidates = distinct
+    // scored pairs (jaccard is functionally determined by the pair),
+    // detected = the threshold filter of the same distinct set (the
+    // same set minhashNearDups emits: filter-before- vs after-distinct
+    // commute). Both counters fold into ONE aggregation pass (count +
+    // conditional count), so the pair-proportional frame is referenced
+    // once — no pin (a pin would violate pinSmall's batch-proportional
+    // contract: 15.9M pairs from 100k docs at 20× replicas) and no
+    // second counting pass.
     val scored = scoredCandidatePairs(df, idCol, textCol,
       numHashes, bands, md5Basis, maxBucket = 1000).distinct()
     // zero-denominator guard: a corpus with no pairs at the threshold

@@ -321,11 +321,7 @@ object Similarity {
     * probe with [[incrementalCosineNearDupsWithKeys]] so the 100 TB
     * embedding corpus is never re-hashed or re-shuffled per batch.
     * Over-cap buckets are dropped (and counted) at build time. Store
-    * layout: same round-12 decision as the text twin —
-    * [[graft.io.Layouts.writePrefixPartitioned]] over `key` is the
-    * single recommended format (serves both the full-scan and the
-    * pruned [[incrementalCosineNearDupsPruned]] regimes; see
-    * `bench_history/r12_layout_shootout.json`).
+    * layout: plain parquet, as for the text twin.
     */
   def corpusLshKeys(corpus: DataFrame, idCol: String, vecCol: String,
       planesPerBand: Int = 8, bands: Int = 4,
@@ -358,7 +354,6 @@ object Similarity {
     * is restricted to the batch's probed key set BEFORE the re-cap
     * window (see [[Dedup.incrementalNearDupsWithKeys]]): the window
     * then runs over a batch-sized sliver, never the corpus-sized table.
-    * Shared by the full-scan and prefix-pruned probe forms.
     */
   private def probeCosineCandidates(batchKeys0: DataFrame,
       corpusKeys: DataFrame, idCol: String, maxBucket: Int): DataFrame = {
@@ -401,72 +396,6 @@ object Similarity {
         (dotProduct(col("__va"), col("__vb")) / (col("__na") * col("__nb")))
           .as("cosine"))
       .where(col("cosine") > threshold)
-  }
-
-  /** [[incrementalCosineNearDupsWithKeys]] against PREFIX-PARTITIONED
-    * stores — the embedding twin of
-    * [[Dedup.incrementalNearDupsPruned]], same layout
-    * ([[graft.io.Layouts.writePrefixPartitioned]]: key table by a hash
-    * prefix of `key`, vector store by a hash prefix of `idCol`), same
-    * two bounded driver-side prefix collections stated as partition-
-    * pruning `isin` filters, same graceful degradation to a full scan
-    * when the batch saturates the prefix space, and the same
-    * empty-prefix guard. Removes the keyed cosine probe's
-    * corpus-proportional scan floor for small batches — the r11
-    * third-decade probe measured the cosine path at 3.27×/decade with
-    * match output growing ∝ planted cliques; this is the serving form.
-    */
-  def incrementalCosineNearDupsPruned(batch: DataFrame, keysDir: String,
-      corpusDir: String, idCol: String, vecCol: String,
-      threshold: Double, planesPerBand: Int = 8, bands: Int = 4,
-      prefixes: Int = 256, maxBucket: Int = 10000): DataFrame = {
-    val spark = batch.sparkSession
-    val batchKeys = Dedup.pinSmall(lshKeys(Dedup.spread(batch), idCol,
-        vecCol, planesPerBand, bands)
-      .withColumnRenamed(idCol, "idA"))
-    val keyPfx = batchKeys
-      .select(graft.io.Layouts.prefixOf(col("key"), prefixes).as("p"))
-      .distinct().collect().map(_.getLong(0)).toSeq
-    val cands = Dedup.pinSmall(probeCosineCandidates(batchKeys,
-        graft.io.Layouts.readPrefixPruned(spark, keysDir, keyPfx, prefixes),
-        idCol, maxBucket))
-    val idPfx = cands
-      .select(graft.io.Layouts.prefixOf(col("idB"), prefixes).as("p"))
-      .distinct().collect().map(_.getLong(0)).toSeq
-    verifyCosineCandidates(batch, cands,
-      graft.io.Layouts.readPrefixPruned(spark, corpusDir, idPfx, prefixes),
-      idCol, vecCol, threshold)
-  }
-
-  /** AUTO-DISPATCHED incremental cosine near-dup probe over STORED
-    * tables — the embedding-modality twin of
-    * [[graft.ops.Dedup.incrementalNearDupsAuto]] (see there for the
-    * dispatch rationale; the r12 crossover's corpus-scale rule):
-    * [[graft.io.Layouts.prunedDispatch]] picks
-    * [[incrementalCosineNearDupsPruned]] when both stores carry one
-    * prefix modulus and their combined bytes reach
-    * `pruneMinStoreBytes`, else the full-scan
-    * [[incrementalCosineNearDupsWithKeys]]. Match semantics identical
-    * between arms (spec-pinned).
-    */
-  def incrementalCosineNearDupsAuto(batch: DataFrame, keysDir: String,
-      corpusDir: String, idCol: String, vecCol: String,
-      threshold: Double, planesPerBand: Int = 8, bands: Int = 4,
-      maxBucket: Int = 10000,
-      pruneMinStoreBytes: Long =
-        graft.io.Layouts.DefaultPruneMinStoreBytes): DataFrame = {
-    val spark = batch.sparkSession
-    graft.io.Layouts.prunedDispatchCached(spark, Seq(keysDir, corpusDir),
-        pruneMinStoreBytes) match {
-      case Some(prefixes) =>
-        incrementalCosineNearDupsPruned(batch, keysDir, corpusDir, idCol,
-          vecCol, threshold, planesPerBand, bands, prefixes, maxBucket)
-      case None =>
-        incrementalCosineNearDupsWithKeys(batch,
-          spark.read.parquet(keysDir).drop(graft.io.Layouts.PrefixCol),
-          spark.read.parquet(corpusDir).drop(graft.io.Layouts.PrefixCol),
-          idCol, vecCol, threshold, planesPerBand, bands, maxBucket)
-    }
   }
 
   /** Cluster-balanced ("diverse") sampling: cap every IVF cell at
@@ -1196,10 +1125,10 @@ object Similarity {
       codebooks: Array[Array[Array[Float]]],
       centroids: Array[Array[Float]], nprobe: Int = 2,
       rerankFactor: Int = 4): DataFrame =
-    pqAdcServe(
+    pqAdcTopKBatchWithCodes(emb,
       pqEncode(ivfAssign(Dedup.spread(emb), vecCol, centroids),
         vecCol, codebooks),
-      emb, idCol, vecCol, queries, queryIdCol, queryVecCol, k,
+      idCol, vecCol, queries, queryIdCol, queryVecCol, k,
       codebooks, centroids, nprobe, rerankFactor)
 
   /** [[pqAdcTopKBatch]] against a PRECOMPUTED codes table — the
@@ -1219,74 +1148,7 @@ object Similarity {
       queries: DataFrame, queryIdCol: String, queryVecCol: String, k: Int,
       codebooks: Array[Array[Array[Float]]],
       centroids: Array[Array[Float]], nprobe: Int = 2,
-      rerankFactor: Int = 4): DataFrame =
-    pqAdcServe(codes, emb, idCol, vecCol, queries, queryIdCol, queryVecCol,
-      k, codebooks, centroids, nprobe, rerankFactor)
-
-  /** [[pqAdcTopKBatchWithCodes]] against a PREFIX-PARTITIONED codes
-    * store ([[graft.io.Layouts.writePrefixPartitioned]] over
-    * `centroid_id`) — the serving form that removes the unpruned
-    * codes-scan term the round-11 probe isolated in
-    * `pq_serve_sqrtcells` (4.04×/decade where the candidates-only
-    * model predicts √10 ≈ 3.16×). The query batch's probed cell set is
-    * already driver-sized (eval-sized queries × nprobe); its prefix
-    * set — bounded by `prefixes`, never by the corpus — becomes a
-    * Hive partition-pruning filter, so the scan reads only the probed
-    * cells' directories instead of every codes file before the
-    * in-plan `centroid_id isin` applies. The bucketed store's row-group
-    * pruning needs the scan to at least open every file's footer;
-    * partition pruning never lists the non-matching directories at
-    * all — the term that grows with the corpus. Results are identical
-    * to the inline and bucketed forms (LayoutsSpec pins both).
-    *
-    * The store must be written with
-    * `Layouts.writePrefixPartitioned(codesDf, codesDir, "centroid_id",
-    * prefixes)`; the read validates the recorded prefix modulus (a
-    * mismatch fails fast — never a silent candidate loss).
-    */
-  def pqAdcTopKBatchPruned(emb: DataFrame, codesDir: String,
-      idCol: String, vecCol: String,
-      queries: DataFrame, queryIdCol: String, queryVecCol: String, k: Int,
-      codebooks: Array[Array[Array[Float]]],
-      centroids: Array[Array[Float]], nprobe: Int = 2,
-      rerankFactor: Int = 4, prefixes: Int = 64): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    pqAdcServeWith(cells => {
-      // the probed cells' prefix set, computed with the WRITER's exact
-      // hash (xxhash64 over the store's IntegerType centroid_id) via a
-      // local-relation row per cell — model-sized, milliseconds
-      val pfx =
-        if (cells.isEmpty) Seq.empty[Long]
-        else cells.toDF("c")
-          .select(graft.io.Layouts.prefixOf(col("c"), prefixes).as("p"))
-          .distinct().collect().map(_.getLong(0)).toSeq
-      graft.io.Layouts.readPrefixPruned(spark, codesDir, pfx, prefixes)
-    }, emb, idCol, vecCol, queries, queryIdCol, queryVecCol,
-      k, codebooks, centroids, nprobe, rerankFactor)
-  }
-
-  private def pqAdcServe(codes: DataFrame, emb: DataFrame,
-      idCol: String, vecCol: String,
-      queries: DataFrame, queryIdCol: String, queryVecCol: String, k: Int,
-      codebooks: Array[Array[Array[Float]]],
-      centroids: Array[Array[Float]], nprobe: Int,
-      rerankFactor: Int): DataFrame =
-    pqAdcServeWith(_ => codes, emb, idCol, vecCol, queries, queryIdCol,
-      queryVecCol, k, codebooks, centroids, nprobe, rerankFactor)
-
-  /** The serve core, with the codes side supplied as a function of the
-    * batch's probed cell set — how the prefix-pruned entry states its
-    * partition filter before the scan exists, while the inline/bucketed
-    * entries ignore the argument (their pruning is the in-plan isin).
-    */
-  private def pqAdcServeWith(codesFor: Seq[Int] => DataFrame,
-      emb: DataFrame,
-      idCol: String, vecCol: String,
-      queries: DataFrame, queryIdCol: String, queryVecCol: String, k: Int,
-      codebooks: Array[Array[Array[Float]]],
-      centroids: Array[Array[Float]], nprobe: Int,
-      rerankFactor: Int): DataFrame = {
+      rerankFactor: Int = 4): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
     // id-type generic like bruteForceTopKBatch / ivfTopKBatch
@@ -1336,7 +1198,7 @@ object Similarity {
     // row groups, so a small query batch reads only its own cells
     // instead of scanning the whole codes table before the join.
     val probedCells = probes.map(_._2).distinct
-    val corpus = codesFor(probedCells.toSeq).where(col("vnorm") > 0 &&
+    val corpus = codes.where(col("vnorm") > 0 &&
       col("centroid_id").isin(probedCells: _*))
     val scored = excludeSelf(
         corpus.join(probeDf, col("centroid_id") === col("__cell")),

@@ -54,8 +54,14 @@ object Pipelines {
           if (numPartitions > 0) numPartitions else enrichConfig.numPartitions))
 
     // A11 running counters ride on the sink jobs as observed metrics
-    // (df.observe) instead of separate count() jobs — the batch loop
-    // runs exactly two jobs: shard write and dead-letter write.
+    // (df.observe) instead of separate count() jobs. A SparkListener on
+    // PipelineSpec's fixture (100 URLs, 40 per batch) sees six jobs per
+    // batch: (1) the url-list JSON schema inference (Sources.urlList),
+    // (2) the window-bound probe count (Enricher.exceedsWindowBound),
+    // (3) the shuffle-map stage of the slice + row_number window ahead
+    // of the enrichment's repartition, (4) the fetch pass that fills the
+    // cached enrichment, (5) the shard write and (6) the dead-letter
+    // write. Jobs 3-6 run in the cancellable group below.
     // error_count follows the reference's semantics: every failed ATTEMPT
     // counts, including transient failures that later succeeded (attempt>1
     // means attempt-1 failures) and every attempt behind a dead letter.

@@ -760,13 +760,6 @@ object EventStreams {
         }
       }
     }
-    // generation stamp (round 14): one bump per store per batch, so a
-    // concurrent serving session's per-generation dispatch cache
-    // (Layouts.prunedDispatchCached) re-validates against the grown
-    // store. Two small metadata writes — noise next to the appends.
-    graft.io.Layouts.bumpStoreGeneration(spark, corpusDir)
-    graft.io.Layouts.bumpStoreGeneration(spark, keysDir)
-    ()
   }
 
   /** [[ingestNearDupKeyed]] for the EMBEDDING modality — the streaming
@@ -1014,11 +1007,6 @@ object EventStreams {
           }
         }
       }
-      // generation stamp at the STORE ROOT (round 14): serving
-      // sessions caching per-generation decisions over the index
-      // re-validate when any batch lands
-      graft.io.Layouts.bumpStoreGeneration(spark, codesDir)
-      ()
     } finally { encoded.unpersist(blocking = false); () }
   }
 

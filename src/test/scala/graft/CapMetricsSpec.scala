@@ -10,7 +10,7 @@ import graft.ops.{CapMetrics, Dedup, Similarity}
   */
 class CapMetricsSpec extends SparkSuite {
 
-  test("lshCandidates counts dropped over-cap buckets (aggregated shape)") {
+  test("minhashNearDups counts dropped over-cap buckets (aggregated shape)") {
     import spark.implicits._
     CapMetrics.reset()
     // 6 identical docs → every band key collides → one 6-id bucket per
@@ -19,7 +19,8 @@ class CapMetricsSpec extends SparkSuite {
     val pair = Seq((10L, "a rare unrelated pair of words"),
       (11L, "a rare unrelated pair of words"))
     val df = (flood ++ pair).toDF("doc_id", "text")
-    val got = Dedup.lshCandidates(df, "doc_id", "text", maxBucket = 3)
+    val got = Dedup.minhashNearDups(df, "doc_id", "text", threshold = 0.5,
+        maxBucket = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got === Set((10L, 11L))) // flood pairs sacrificed, pair kept
     val (groups, rows) = CapMetrics.dropsFor("lsh_candidates")
@@ -78,7 +79,8 @@ class CapMetricsSpec extends SparkSuite {
     CapMetrics.reset()
     val df = Seq((1L, "alpha beta gamma"), (2L, "alpha beta gamma"))
       .toDF("doc_id", "text")
-    Dedup.lshCandidates(df, "doc_id", "text", maxBucket = 100).collect()
+    Dedup.minhashNearDups(df, "doc_id", "text", threshold = 0.5,
+      maxBucket = 100).collect()
     assert(CapMetrics.dropsFor("lsh_candidates") === ((0L, 0L)))
   }
 
@@ -93,7 +95,8 @@ class CapMetricsSpec extends SparkSuite {
     // plant a mass-duplication drop, then render again
     val flood = (1L to 6L).map(i => (i, "the same flood document text"))
       .toDF("doc_id", "text")
-    Dedup.lshCandidates(flood, "doc_id", "text", maxBucket = 3).collect()
+    Dedup.minhashNearDups(flood, "doc_id", "text", threshold = 0.5,
+      maxBucket = 3).collect()
     val md = graft.agg.Statistics.markdownReport(stats,
       Seq(("image", 2L)), 1L)
     assert(md.contains("## Cap drops"), md)

@@ -72,21 +72,23 @@ class LayoutsSpec extends SparkSuite {
       Dedup.corpusBandKeys(corpus, "doc_id", "text"), "b_corpus_keys",
       "band", spark.conf.get("spark.sql.shuffle.partitions").toInt, "key")
     val stored = spark.table("b_corpus_keys")
-    val viaStore = Dedup.incrementalNearDupsWithKeys(
-      batch, stored, corpus, "doc_id", "text", threshold = 0.9)
-    val inline = Dedup.incrementalNearDups(
-      batch, corpus, "doc_id", "text", threshold = 0.9)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("idA", "idB").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(rows(viaStore) === rows(inline) && rows(inline).nonEmpty)
-    // the keyed probe above left its lazy pins (Dedup.pinSmall)
-    // registered with the CacheManager; the steady-state query below
-    // contains plan-equal fragments (the batch band keys) that cache
-    // substitution would silently replace with InMemoryRelations —
-    // hiding the bucketed scan this test pins (the r14 driver-run
-    // failure). Drop them: the property under test is the stored
-    // table's layout, not cache interplay.
-    spark.catalog.clearCache()
+    // the keyed probes register lazy pins (Dedup.pinSmall) with the
+    // CacheManager; the steady-state query below contains plan-equal
+    // fragments (the batch band keys) that cache substitution would
+    // silently replace with InMemoryRelations — hiding the bucketed
+    // scan this test pins. The pin scope releases exactly the probes'
+    // own pins when it closes, leaving the rest of the session's cache
+    // alone: the property under test is the stored table's layout, not
+    // cache interplay.
+    graft.ops.PinScope.withScope {
+      val viaStore = Dedup.incrementalNearDupsWithKeys(
+        batch, stored, corpus, "doc_id", "text", threshold = 0.9)
+      val inline = Dedup.incrementalNearDups(
+        batch, corpus, "doc_id", "text", threshold = 0.9)
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.select("idA", "idB").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(rows(viaStore) === rows(inline) && rows(inline).nonEmpty)
+    }
     // steady-state plan: the stored key table is scanned, never rebuilt —
     // its (band, key) bucketing matches the join requirement exactly, so
     // only the batch side exchanges (its spread + window shuffles) and
@@ -111,191 +113,6 @@ class LayoutsSpec extends SparkSuite {
       val exchanges = "Exchange ".r.findAllIn(finalPlan).length
       assert(exchanges <= 4, p)
     }
-  }
-
-  test("prefix-partitioned stores: pruned probe matches inline; scans prune") {
-    import graft.ops.Dedup
-    import spark.implicits._
-    val docs = Tables.documents(spark, sfDir)
-    val corpus = docs.where($"doc_id" % 3 =!= 0)
-    val batch = docs.where($"doc_id" % 3 === 0)
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-prefix-probe").toString
-    Layouts.writePrefixPartitioned(
-      Dedup.corpusBandKeys(corpus, "doc_id", "text"),
-      s"$base/keys", "key", prefixes = 16)
-    Layouts.writePrefixPartitioned(
-      corpus.select($"doc_id", $"text"),
-      s"$base/corpus", "doc_id", prefixes = 16)
-    // identical match semantics vs the inline ground truth
-    val pruned = Dedup.incrementalNearDupsPruned(batch, s"$base/keys",
-      s"$base/corpus", "doc_id", "text", threshold = 0.9, prefixes = 16)
-    val inline = Dedup.incrementalNearDups(
-      batch, corpus, "doc_id", "text", threshold = 0.9)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("idA", "idB").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(rows(pruned) === rows(inline) && rows(inline).nonEmpty)
-    // the layout actually prunes: an isin on a prefix subset reads
-    // strictly fewer files than the full store (partition pruning, not
-    // a post-scan filter)
-    val all = spark.read.parquet(s"$base/corpus")
-    val one = all.where(col(Layouts.PrefixCol).isin(0L, 1L))
-    // count files ACTUALLY read (inputFiles reflects the relation
-    // before partition pruning, so it can't see the prune)
-    def filesRead(df: org.apache.spark.sql.DataFrame) =
-      df.select(input_file_name()).distinct().count()
-    assert(filesRead(one) < filesRead(all),
-      s"${filesRead(one)} vs ${filesRead(all)}")
-    // reader-side prefix expression matches the writer's: every row
-    // lands in the partition its recomputed prefix names
-    val mismatched = spark.read.parquet(s"$base/corpus")
-      .where(col(Layouts.PrefixCol) =!=
-        Layouts.prefixOf($"doc_id", 16))
-      .count()
-    assert(mismatched === 0L)
-    // empty-batch edge: no keys -> empty prefix set -> empty result
-    // with the probe's schema, never an isin()-with-no-arguments plan
-    val empty = Dedup.incrementalNearDupsPruned(batch.limit(0),
-      s"$base/keys", s"$base/corpus", "doc_id", "text", threshold = 0.9,
-      prefixes = 16)
-    assert(empty.columns.toSeq === Seq("idA", "idB", "jaccard"))
-    assert(empty.count() === 0L)
-  }
-
-  test("incrementalNearDupsAuto dispatches by marker + store bytes; arms agree") {
-    import graft.ops.Dedup
-    import spark.implicits._
-    val docs = Tables.documents(spark, sfDir)
-    val corpus = docs.where($"doc_id" % 3 =!= 0)
-    val batch = docs.where($"doc_id" % 3 === 0)
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-auto-dispatch").toString
-    Layouts.writePrefixPartitioned(
-      Dedup.corpusBandKeys(corpus, "doc_id", "text"),
-      s"$base/keys", "key", prefixes = 16)
-    Layouts.writePrefixPartitioned(
-      corpus.select($"doc_id", $"text"), s"$base/corpus", "doc_id",
-      prefixes = 16)
-    // the decision: tiny stores sit below the default threshold (full
-    // scan); minBytes = 0 forces the pruned arm; a modulus mismatch or
-    // an unstamped store always full-scans
-    assert(Layouts.prunedDispatch(spark,
-      Seq(s"$base/keys", s"$base/corpus")) === None)
-    assert(Layouts.prunedDispatch(spark,
-      Seq(s"$base/keys", s"$base/corpus"), 0L) === Some(16))
-    Layouts.writePrefixPartitioned(
-      corpus.select($"doc_id", $"text"), s"$base/corpus8", "doc_id",
-      prefixes = 8)
-    assert(Layouts.prunedDispatch(spark,
-      Seq(s"$base/keys", s"$base/corpus8"), 0L) === None)
-    corpus.select($"doc_id", $"text").write.parquet(s"$base/plain")
-    assert(Layouts.prunedDispatch(spark,
-      Seq(s"$base/keys", s"$base/plain"), 0L) === None)
-    // BOTH dispatch outcomes give the inline ground truth's matches
-    val inline = Dedup.incrementalNearDups(batch, corpus, "doc_id",
-      "text", threshold = 0.9)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("idA", "idB").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val viaFull = Dedup.incrementalNearDupsAuto(batch, s"$base/keys",
-      s"$base/corpus", "doc_id", "text", threshold = 0.9)
-    val viaPruned = Dedup.incrementalNearDupsAuto(batch, s"$base/keys",
-      s"$base/corpus", "doc_id", "text", threshold = 0.9,
-      pruneMinStoreBytes = 0L)
-    assert(rows(viaFull) === rows(inline) && rows(inline).nonEmpty)
-    assert(rows(viaPruned) === rows(inline))
-    // embedding flavor: same dispatcher, same equality pins
-    val emb = Tables.embeddings(spark, sfDir)
-    val vCorpus = emb.where($"vec_id" % 3 =!= 0)
-    val vBatch = emb.where($"vec_id" % 3 === 0)
-    Layouts.writePrefixPartitioned(
-      graft.ops.Similarity.corpusLshKeys(vCorpus, "vec_id", "embedding"),
-      s"$base/vkeys", "key", prefixes = 16)
-    Layouts.writePrefixPartitioned(
-      vCorpus.select($"vec_id", $"embedding"), s"$base/vcorpus", "vec_id",
-      prefixes = 16)
-    val vInline = graft.ops.Similarity.incrementalCosineNearDups(
-      vBatch, vCorpus, "vec_id", "embedding", threshold = 0.3)
-    def vRows(df: org.apache.spark.sql.DataFrame) =
-      df.select("idA", "idB").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val vFull = graft.ops.Similarity.incrementalCosineNearDupsAuto(
-      vBatch, s"$base/vkeys", s"$base/vcorpus", "vec_id", "embedding",
-      threshold = 0.3)
-    val vPruned = graft.ops.Similarity.incrementalCosineNearDupsAuto(
-      vBatch, s"$base/vkeys", s"$base/vcorpus", "vec_id", "embedding",
-      threshold = 0.3, pruneMinStoreBytes = 0L)
-    assert(vRows(vFull) === vRows(vInline) && vRows(vInline).nonEmpty)
-    assert(vRows(vPruned) === vRows(vInline))
-  }
-
-  test("prefix store marker: recorded modulus round-trips, mismatches fail fast") {
-    import spark.implicits._
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-prefix-marker").toString
-    val df = (1L to 50L).toDF("id")
-    Layouts.writePrefixPartitioned(df, s"$base/store", "id", prefixes = 8)
-    // the marker records the writer's modulus and is invisible to
-    // parquet discovery (the store still reads whole)
-    assert(Layouts.readPrefixCount(spark, s"$base/store") === Some(8))
-    assert(spark.read.parquet(s"$base/store").count() === 50L)
-    // matching modulus reads; the pruned subset is exactly the rows
-    // whose recomputed prefix is in the set
-    val got = Layouts.readPrefixPruned(spark, s"$base/store",
-      Seq(0L, 3L), prefixes = 8)
-    val want = df.where(Layouts.prefixOf($"id", 8).isin(0L, 3L))
-    assert(got.collect().map(_.getLong(0)).sorted
-      === want.collect().map(_.getLong(0)).sorted)
-    // a MISMATCHED modulus would prune away matching rows silently —
-    // the reader refuses instead (the round-11 advisor finding)
-    val e1 = intercept[IllegalArgumentException] {
-      Layouts.readPrefixPruned(spark, s"$base/store", Seq(0L), prefixes = 16)
-    }
-    assert(e1.getMessage.contains("records 8"))
-    // a store with NO marker was not written by writePrefixPartitioned:
-    // its __pfx provenance is unknown, so the pruned read refuses too
-    df.withColumn(Layouts.PrefixCol, Layouts.prefixOf($"id", 8))
-      .write.partitionBy(Layouts.PrefixCol).parquet(s"$base/unstamped")
-    val e2 = intercept[IllegalArgumentException] {
-      Layouts.readPrefixPruned(spark, s"$base/unstamped", Seq(0L),
-        prefixes = 8)
-    }
-    assert(e2.getMessage.contains("no marker"))
-    // overwrite with a different modulus replaces the marker
-    Layouts.writePrefixPartitioned(df, s"$base/store", "id", prefixes = 4)
-    assert(Layouts.readPrefixCount(spark, s"$base/store") === Some(4))
-  }
-
-  test("prefix-partitioned embedding stores: pruned cosine probe matches inline") {
-    import graft.ops.Similarity
-    import spark.implicits._
-    val emb = Tables.embeddings(spark, sfDir)
-    val corpus = emb.where($"vec_id" % 3 =!= 0)
-    val batch = emb.where($"vec_id" % 3 === 0)
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-prefix-cosine").toString
-    Layouts.writePrefixPartitioned(
-      Similarity.corpusLshKeys(corpus, "vec_id", "embedding"),
-      s"$base/keys", "key", prefixes = 16)
-    Layouts.writePrefixPartitioned(
-      corpus.select($"vec_id", $"embedding"),
-      s"$base/corpus", "vec_id", prefixes = 16)
-    val pruned = Similarity.incrementalCosineNearDupsPruned(batch,
-      s"$base/keys", s"$base/corpus", "vec_id", "embedding",
-      threshold = 0.3, prefixes = 16)
-    val inline = Similarity.incrementalCosineNearDups(batch, corpus,
-      "vec_id", "embedding", threshold = 0.3)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("idA", "idB").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(rows(pruned) === rows(inline) && rows(inline).nonEmpty)
-    // empty-batch edge, embedding flavor
-    val empty = Similarity.incrementalCosineNearDupsPruned(batch.limit(0),
-      s"$base/keys", s"$base/corpus", "vec_id", "embedding",
-      threshold = 0.3, prefixes = 16)
-    assert(empty.columns.toSeq === Seq("idA", "idB", "cosine"))
-    assert(empty.count() === 0L)
   }
 
   test("persisted sign-LSH keys: stored embedding probe matches inline") {
@@ -362,52 +179,6 @@ class LayoutsSpec extends SparkSuite {
     assert(nEx(p) <= nEx(pi), s"stored=${nEx(p)} inline=${nEx(pi)}\n$p")
   }
 
-  test("prefix-partitioned PQ codes: pruned serve matches inline and prunes the scan") {
-    import graft.ops.Similarity
-    import spark.implicits._
-    val emb = Tables.embeddings(spark, sfDir)
-    val centroids = Similarity.ivfCentroids(emb, "vec_id", "embedding", 8)
-    val cbs = Similarity.pqCodebooks(emb, "vec_id", "embedding", 8, 8)
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-pq-prefix").toString
-    Layouts.writePrefixPartitioned(
-      Similarity.pqEncode(
-          Similarity.ivfAssign(emb, "embedding", centroids), "embedding", cbs)
-        .select($"vec_id", $"pq_code", $"vnorm", $"centroid_id"),
-      s"$base/codes", "centroid_id", prefixes = 8)
-    // a SMALL batch (2 queries × nprobe 2 cells) — the regime the
-    // partition prune exists for
-    val queries = emb.where($"vec_id".isin(100L, 200L))
-    val pruned = Similarity.pqAdcTopKBatchPruned(emb, s"$base/codes",
-      "vec_id", "embedding", queries, "vec_id", "embedding", k = 5,
-      cbs, centroids, nprobe = 2, prefixes = 8)
-    val inline = Similarity.pqAdcTopKBatch(emb, "vec_id", "embedding",
-      queries, "vec_id", "embedding", k = 5, cbs, centroids, nprobe = 2)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("query_id", "vec_id", "adc_cosine", "cosine").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
-        .toSet
-    assert(rows(pruned) === rows(inline) && rows(inline).nonEmpty)
-    // the store spreads over > nprobe×queries prefixes, so the probed
-    // cells' prefix filter reads strictly fewer files than the store
-    // holds (Hive partition pruning — directories never listed)
-    def filesRead(df: org.apache.spark.sql.DataFrame) =
-      df.select(input_file_name()).distinct().count()
-    val all = spark.read.parquet(s"$base/codes")
-    val cellPfx = Seq(100L, 200L).toDF("vec_id")
-      .join(emb, Seq("vec_id"))
-      .select(graft.functions.GraftFunctions.fn("graft_nearest_centroid",
-        $"embedding", typedLit(centroids.map(_.toSeq).toSeq)))
-    assert(filesRead(Layouts.readPrefixPruned(spark, s"$base/codes",
-        Seq(0L), prefixes = 8)) < filesRead(all))
-    assert(cellPfx.count() === 2L) // sanity: both query vectors resolved
-    // an empty query batch serves an empty result, never a full scan
-    val none = Similarity.pqAdcTopKBatchPruned(emb, s"$base/codes",
-      "vec_id", "embedding", queries.limit(0), "vec_id", "embedding",
-      k = 5, cbs, centroids, nprobe = 2, prefixes = 8)
-    assert(none.count() === 0L)
-  }
-
   test("compactInPlace swaps safely; recoverCompaction repairs every crash window") {
     import spark.implicits._
     val base = java.nio.file.Files
@@ -453,142 +224,18 @@ class LayoutsSpec extends SparkSuite {
     assert(Layouts.compactInPlace(spark, dir) >= 1 && rows() === before)
   }
 
-  test("compactInPlace on a prefix store preserves marker, partitioning and pruned reads") {
+  test("compactInPlace refuses a partitioned store instead of flattening it") {
     import spark.implicits._
     val base = java.nio.file.Files
-      .createTempDirectory("graft-compact-prefix").toString
-    val dir = s"$base/store"
-    val df = (1L to 200L).toDF("id")
-    Layouts.writePrefixPartitioned(df, dir, "id", prefixes = 8)
-    // fragment the store: per-row appends into the partition dirs would
-    // complicate the fixture — instead just verify the re-lay path on
-    // the fresh store (one file per prefix in, one per prefix out)
-    val written = Layouts.compactInPlace(spark, dir)
-    assert(written === 8)
-    // marker survives the swap with the original modulus; the
-    // generation advances PAST the pre-swap value (the swap drops the
-    // old marker with the old directory — a reset to 1 would let a
-    // cached dispatch skip re-validation across a real store change)
-    assert(Layouts.readPrefixCount(spark, dir) === Some(8))
-    assert(Layouts.readStoreGeneration(spark, dir) === 2L)
-    // partitioning survives: the store still reads whole AND pruned,
-    // with the pruned subset exactly the matching-prefix rows
-    assert(spark.read.parquet(dir).count() === 200L)
-    val got = Layouts.readPrefixPruned(spark, dir, Seq(0L, 5L), prefixes = 8)
-      .collect().map(_.getLong(0)).sorted
-    val want = df.where(Layouts.prefixOf($"id", 8).isin(0L, 5L))
-      .collect().map(_.getLong(0)).sorted
-    assert(got === want && got.nonEmpty)
-    // a partitioned directory WITHOUT the marker is refused loudly:
-    // compacting it would silently flatten an unrecognized layout
-    df.withColumn("part", $"id" % 3)
+      .createTempDirectory("graft-compact-hive").toString
+    // a partitioned directory is refused loudly: compacting it would
+    // silently flatten the layout
+    (1L to 200L).toDF("id").withColumn("part", $"id" % 3)
       .write.partitionBy("part").parquet(s"$base/hive")
     val e = intercept[IllegalArgumentException] {
       Layouts.compactInPlace(spark, s"$base/hive")
     }
     assert(e.getMessage.contains("subdirectories"))
-  }
-
-  test("prunedDispatchCached re-validates only on generation change") {
-    import spark.implicits._
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-dispatch-cache").toString
-    def p(s: String) = new org.apache.hadoop.fs.Path(s)
-    val fs = p(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Layouts.writePrefixPartitioned((1L to 500L).toDF("id"),
-      s"$base/a", "id", prefixes = 8)
-    Layouts.writePrefixPartitioned((1L to 500L).toDF("id"),
-      s"$base/b", "id", prefixes = 8)
-    val dirs = Seq(s"$base/a", s"$base/b")
-    // every writer stamps generation 1 at build
-    assert(Layouts.readStoreGeneration(spark, s"$base/a") === 1L)
-    assert(Layouts.prunedDispatchCached(spark, dirs, 0L) === Some(8))
-    // mutate WITHOUT a generation bump (drop b's prefix marker): the
-    // fresh dispatch answers None, but the cached entry does NOT
-    // re-validate — generations unchanged, cached decision returned.
-    // (Stale decisions are loud-safe: readPrefixPruned rejects a
-    // modulus mismatch; they are never silently wrong.)
-    assert(fs.delete(p(s"$base/b/${Layouts.PrefixMarker}"), false))
-    assert(Layouts.prunedDispatch(spark, dirs, 0L) === None)
-    assert(Layouts.prunedDispatchCached(spark, dirs, 0L) === Some(8))
-    // a generation bump forces re-validation
-    Layouts.bumpStoreGeneration(spark, s"$base/b")
-    assert(Layouts.prunedDispatchCached(spark, dirs, 0L) === None)
-    // UNSTAMPED stores (generation 0 anywhere) are never cached: the
-    // cached entry recomputes on every call, so a mutation is seen
-    // immediately even without a bump
-    Layouts.writePrefixPartitioned((1L to 500L).toDF("id"),
-      s"$base/c", "id", prefixes = 8)
-    Layouts.writePrefixPartitioned((1L to 500L).toDF("id"),
-      s"$base/d", "id", prefixes = 8)
-    val dirs2 = Seq(s"$base/c", s"$base/d")
-    assert(fs.delete(p(s"$base/c/${Layouts.GenerationMarker}"), false))
-    assert(Layouts.prunedDispatchCached(spark, dirs2, 0L) === Some(8))
-    assert(fs.delete(p(s"$base/d/${Layouts.PrefixMarker}"), false))
-    assert(Layouts.prunedDispatchCached(spark, dirs2, 0L) === None)
-  }
-
-  test("compactInPlace prefix arm honors targetBytes: oversized prefixes sub-split") {
-    import spark.implicits._
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-compact-prefix-tb").toString
-    val dir = s"$base/store"
-    // 4 prefixes over incompressible-ish text so each leaf lands well
-    // over the tiny target below (the r13 arm wrote exactly ONE file
-    // per prefix regardless of targetBytes — the advisor finding)
-    val df = (1L to 4000L).toDF("id")
-      .withColumn("t", md5(concat($"id".cast("string"), lit("pad"))))
-    Layouts.writePrefixPartitioned(df, dir, "id", prefixes = 4)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val leafBytes = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
-      .filter(_.isDirectory)
-      .map(st => fs.getContentSummary(st.getPath).getLength)
-    val target = leafBytes.max / 3 // every prefix needs >= 3 files
-    val written = Layouts.compactInPlace(spark, dir, target)
-    assert(written > 4, s"expected sub-split beyond one file per prefix, got $written")
-    // rows and pruned reads survive the sub-split re-lay
-    assert(spark.read.parquet(dir).count() === 4000L)
-    assert(Layouts.readPrefixCount(spark, dir) === Some(4))
-    val got = Layouts.readPrefixPruned(spark, dir, Seq(2L), prefixes = 4)
-      .select("id").collect().map(_.getLong(0)).sorted
-    val want = df.where(Layouts.prefixOf($"id", 4) === 2L)
-      .select("id").collect().map(_.getLong(0)).sorted
-    assert(got === want && got.nonEmpty)
-    // each leaf now holds multiple files, none grossly over target
-    // (hash salt assignment is approximate, not exact packing)
-    val leaves = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
-      .filter(_.isDirectory)
-    leaves.foreach { st =>
-      val files = fs.listStatus(st.getPath).filter(_.isFile)
-      assert(files.length >= 2, s"${st.getPath} not sub-split")
-      files.foreach(f => assert(f.getLen <= 4 * target,
-        s"${f.getPath} is ${f.getLen} B vs target $target"))
-    }
-    // a LARGE target restores the one-file-per-prefix floor
-    assert(Layouts.compactInPlace(spark, dir, 512L << 20) === 4)
-  }
-
-  test("writePrefixPartitioned warns below the pruned-dispatch threshold") {
-    import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-prefix-warn").toString + "/store"
-    // additive listener into a synchronized list: concurrent warnings
-    // from other threads (streaming micro-batches of another suite in
-    // the shared forked JVM) may also land here — harmless, the
-    // assertion filters by this test's unique temp dir
-    val warnings =
-      java.util.Collections.synchronizedList(new java.util.ArrayList[String])
-    val listener: String => Unit = m => { warnings.add(m); () }
-    Layouts.addWarnListener(listener)
-    try Layouts.writePrefixPartitioned((1L to 100L).toDF("id"), dir, "id",
-      prefixes = 4)
-    finally Layouts.removeWarnListener(listener)
-    // a ~KB store is far below DefaultPruneMinStoreBytes: the
-    // minimum-build-size rule must fire (and name the threshold)
-    import scala.jdk.CollectionConverters._
-    assert(warnings.asScala.exists(w => w.contains(dir) &&
-      w.contains((Layouts.DefaultPruneMinStoreBytes >> 20).toString)))
   }
 
   test("compactGenerational folds only sub-graduation files; crash windows roll forward") {
@@ -619,11 +266,8 @@ class LayoutsSpec extends SparkSuite {
     assert(Layouts.smallFileCount(spark, dir, target / 2) === 10)
     // the generational fold: small files merge, the graduated file is
     // NEVER rewritten (same name, same mtime), rows identical, no
-    // staging/manifest leftovers; the commit stamps a generation (the
-    // store was built by raw appends, so it starts unstamped at 0)
-    assert(Layouts.readStoreGeneration(spark, dir) === 0L)
+    // staging/manifest leftovers
     assert(Layouts.compactGenerational(spark, dir, target) >= 1)
-    assert(Layouts.readStoreGeneration(spark, dir) === 1L)
     assert(rows() === before)
     val after = dataFiles()
     assert(after.exists(st => st.getPath.getName == gradName &&
