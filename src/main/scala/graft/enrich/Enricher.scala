@@ -30,8 +30,8 @@ object Enricher {
     *
     * `numPartitions` sets fetch-stage parallelism (0 = auto via
     * [[graft.ops.Dedup.spread]]).
-    */
-  /** `distributedIndex = true` switches `batch_index` assignment from
+    *
+    * `distributedIndex = true` switches `batch_index` assignment from
     * the single-partition `row_number` window to a range-partitioned
     * rank (sample bounds → per-partition sort → offset by preceding
     * partition counts): the SAME url-order rank, bit-identical indices
@@ -43,15 +43,16 @@ object Enricher {
     *
     * `windowIndexMaxRows` ENFORCES that contract instead of trusting it
     * (round-11 hardening): when `distributedIndex = false`, enrich()
-    * first runs a LocalLimit-bounded probe (`limit(bound + 1).count()`,
-    * a short-circuiting job over at most bound + 1 url rows — never a
-    * full scan of an unbounded list) and auto-switches to the
-    * distributed rank above the bound. The indices are bit-identical
-    * either way, so in-contract callers see no behavior change beyond
-    * the ~ms probe job; an out-of-contract caller that forgot the flag
-    * gets the scalable path instead of a driver-killing
-    * single-partition sort. `Int.MaxValue` disables the probe (trust
-    * the caller — the pre-round-11 behavior).
+    * checks the frame against the bound (see [[exceedsWindowBound]]:
+    * the optimizer's static row bound where it proves the frame fits —
+    * the processor's sliced batches — else a LocalLimit-bounded probe
+    * job over at most bound + 1 url rows, never a full scan of an
+    * unbounded list) and auto-switches to the distributed rank above
+    * the bound. The indices are bit-identical either way, so
+    * in-contract callers see no behavior change; an out-of-contract
+    * caller that forgot the flag gets the scalable path instead of a
+    * driver-killing single-partition sort. `Int.MaxValue` disables the
+    * check (trust the caller — the pre-round-11 behavior).
     */
   case class Config(maxAttempts: Int = 2, recordTimeoutMs: Long = 10000,
       backoffMs: Long = 1000, startIndex: Long = 0, numPartitions: Int = 0,
@@ -156,16 +157,21 @@ object Enricher {
     Enriched(records, dead, unified, pins)
   }
 
-  /** The `maxRecords`-contract probe behind `Config.windowIndexMaxRows`:
-    * true when `urls` holds MORE rows than the bound, measured by a
-    * `limit(bound + 1).count()` — a GlobalLimit plan that stops the
-    * scan as soon as bound + 1 rows exist, so an unbounded input costs
-    * one bounded job, not a full count. The saturating guard keeps
-    * `Int.MaxValue` a valid "trust the caller" opt-out.
+  /** The `maxRecords`-contract check behind `Config.windowIndexMaxRows`:
+    * true when `urls` holds MORE rows than the bound. When the optimized
+    * plan's static `maxRows` already proves the frame fits (a `limit(n)`
+    * with n ≤ bound — every processor batch, via `Sources.slice`) no job
+    * runs. Otherwise a `limit(bound + 1).count()` probe measures it — a
+    * GlobalLimit plan that stops the scan as soon as bound + 1 rows
+    * exist, so an unbounded input costs one bounded job, not a full
+    * count. The saturating guard keeps `Int.MaxValue` a valid "trust
+    * the caller" opt-out.
     */
   private[enrich] def exceedsWindowBound(urls: DataFrame,
       cfg: Config): Boolean =
     cfg.windowIndexMaxRows < Int.MaxValue &&
+      !urls.queryExecution.optimizedPlan.maxRows
+        .exists(_ <= cfg.windowIndexMaxRows) &&
       urls.select(col("url")).limit(cfg.windowIndexMaxRows + 1).count() >
         cfg.windowIndexMaxRows
 

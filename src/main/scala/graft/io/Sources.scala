@@ -12,18 +12,14 @@ object Sources {
 
   /** S1+S2: URL-list source — JSON array of objects, project `url`, drop
     * null/missing (reference test_parquet_processor.py:31-38,426-429).
-    * A file where NO object has a `url` field infers a schema without
-    * the column; "drop missing" must then yield an empty frame (the
-    * reference's `u.get('url')` filter), not an UNRESOLVED_COLUMN
-    * crash — so the column is null-backfilled before the projection.
+    * The schema is pinned to `url STRING` (as in the streaming twin,
+    * `streaming.StreamingProcessor.start`), so no inference job runs per
+    * batch, and a file where NO object has a `url` field reads as all
+    * nulls — an empty frame, the reference's `u.get('url')` filter.
     */
-  def urlList(spark: SparkSession, path: String): DataFrame = {
-    val raw = spark.read.option("multiLine", true).json(path)
-    val withUrl =
-      if (raw.schema.fieldNames.contains("url")) raw
-      else raw.withColumn("url", lit(null).cast("string"))
-    withUrl.select("url").where(col("url").isNotNull)
-  }
+  def urlList(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema("url STRING").option("multiLine", true).json(path)
+      .where(col("url").isNotNull)
 
   /** S3: single-file/directory parquet scan. */
   def parquet(spark: SparkSession, path: String): DataFrame =

@@ -1,5 +1,10 @@
 package graft.pipeline
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -54,14 +59,14 @@ object Pipelines {
           if (numPartitions > 0) numPartitions else enrichConfig.numPartitions))
 
     // A11 running counters ride on the sink jobs as observed metrics
-    // (df.observe) instead of separate count() jobs. A SparkListener on
-    // PipelineSpec's fixture (100 URLs, 40 per batch) sees six jobs per
-    // batch: (1) the url-list JSON schema inference (Sources.urlList),
-    // (2) the window-bound probe count (Enricher.exceedsWindowBound),
-    // (3) the shuffle-map stage of the slice + row_number window ahead
-    // of the enrichment's repartition, (4) the fetch pass that fills the
-    // cached enrichment, (5) the shard write and (6) the dead-letter
-    // write. Jobs 3-6 run in the cancellable group below.
+    // (df.observe) instead of separate count() jobs. A batch runs four
+    // jobs, all in the cancellable group below (PipelineSpec pins the
+    // count with a SparkListener): (1) the shuffle-map stage of the
+    // slice + row_number window ahead of the enrichment's repartition,
+    // (2) the fetch pass that fills the cached enrichment, (3) the shard
+    // write and (4) the dead-letter write. The url list reads with a
+    // pinned schema (no inference job) and the slice's limit proves the
+    // window bound statically (no probe job).
     // error_count follows the reference's semantics: every failed ATTEMPT
     // counts, including transient failures that later succeeded (attempt>1
     // means attempt-1 failures) and every attempt behind a dead letter.
@@ -173,10 +178,6 @@ object Pipelines {
 
   // ------------------------------------------------------------- aggregator
 
-  /** §3.3: shard tree → contract validation → schema-merge union → stats →
-    * parquet + csv + statistics.json + markdown. The only shuffle in the
-    * whole system is the tiny media_type histogram.
-    */
   /** One-call corpus RELEASE artifact generator — the operational
     * entrypoint a data team runs before shipping a training corpus:
     *
@@ -247,6 +248,10 @@ object Pipelines {
     card
   }
 
+  /** §3.3: shard tree → contract validation → schema-merge union → stats →
+    * parquet + csv + statistics.json + markdown. The only shuffle in the
+    * whole system is the tiny media_type histogram.
+    */
   def aggregator(spark: SparkSession, shardsDir: String, outDir: String,
       singleFile: Boolean = false): Statistics.GlobalStats = {
     // Contract validation is PER SHARD FILE, excluding violators and
@@ -254,20 +259,21 @@ object Pipelines {
     // Validating only the schema-MERGED frame has two failure modes: one
     // bad shard is silently null-filled into the combined output (its
     // rows count as successes), and an all-bad tree is fatal instead of
-    // exclude-and-continue. Footer reads are O(files) driver metadata
-    // work, the same order as the file census below.
-    // ONE recursive listing serves validation, the merged read AND the
-    // census/size-profile below (it was previously recomputed four
-    // times — each a full O(files) LIST walk, thousands of sequential
-    // RPCs on an object store). Reads use the RAW URIs: the normalized
-    // form is a join key against input_file_name(), and feeding it
-    // back into spark.read strips the scheme (s3a://<bucket>/x →
-    // /bucket/x) and keeps percent-encoding (a space in a local
+    // exclude-and-continue. The check reads each shard's footer on the
+    // driver (footerFieldNames) — O(files) metadata work, the same order
+    // as the file census below, and no Spark job per file.
+    // ONE recursive listing serves validation, the merged read, the sink
+    // sizing AND the census/size-profile below (it was previously
+    // recomputed four times — each a full O(files) LIST walk, thousands
+    // of sequential RPCs on an object store). Reads use the RAW URIs:
+    // the normalized form is a join key against input_file_name(), and
+    // feeding it back into a reader strips the scheme (s3a://<bucket>/x
+    // → /bucket/x) and keeps percent-encoding (a space in a local
     // checkout path), resolving against the wrong filesystem.
     val listed = Statistics.listParquetFilesRaw(spark, shardsDir)
+    val fields = footerFieldNames(spark, listed.map(_._1))
     val (okListed, badListed) = listed.partition { case (uri, _, _) =>
-      (MediaSchema.requiredColumns --
-        spark.read.parquet(uri).schema.fieldNames.toSet).isEmpty
+      (MediaSchema.requiredColumns -- fields(uri)).isEmpty
     }
     if (badListed.nonEmpty)
       System.err.println(s"[graft] aggregator: excluding ${badListed.size} " +
@@ -286,6 +292,19 @@ object Pipelines {
         throw new IllegalArgumentException(
           s"shards violate read contract; missing columns: $missing")
     }
+    // The combined sinks get one part file per maxPartitionBytes of
+    // contract-passing input instead of one per scan partition (the
+    // scan splits every small shard into its own partition), but never
+    // fewer than min(files, defaultParallelism): coalesce is narrow, so
+    // the part count is also the scan + encode task count, and a large
+    // maxPartitionBytes must not serialize the sink stage. Only the
+    // sinks read the coalesced frame: the statistics keep the shard-per-
+    // partition scan, so their float sums add in the same order.
+    val maxPartBytes = spark.sessionState.conf.filesMaxPartitionBytes
+    val sinkParts = math.max(
+      (okListed.map(_._3).sum + maxPartBytes - 1) / maxPartBytes,
+      math.min(okListed.size, spark.sparkContext.defaultParallelism).toLong)
+    val combined = df.coalesce(sinkParts.toInt)
     graft.GraftSession.runCancellable(spark, "graft-aggregator", shardsDir) {
       val stats = Statistics.globalStats(df)
       val histogram = Statistics.mediaTypeHistogram(df).collect()
@@ -299,8 +318,8 @@ object Pipelines {
         .map(r => (r.getString(0), r.getLong(1),
           if (r.isNullAt(2)) 0L else r.getLong(2))).toSeq
 
-      Sinks.parquet(df, s"$outDir/combined.parquet", singleFile)
-      Sinks.csv(df, s"$outDir/combined.csv", singleFile)
+      Sinks.parquet(combined, s"$outDir/combined.parquet", singleFile)
+      Sinks.csv(combined, s"$outDir/combined.csv", singleFile)
       Sinks.writeText(s"$outDir/statistics.json",
         Statistics.statsJson(stats, histogram, okKeys.size.toLong))
       Sinks.writeText(s"$outDir/aggregation_summary.md",
@@ -312,5 +331,24 @@ object Pipelines {
             listed.map { case (_, key, len) => (key, len) })))
       stats
     }
+  }
+
+  /** Top-level field names of each Parquet file, keyed by its URI, from
+    * its footer alone: a driver-side read with parquet-hadoop's
+    * `ParquetFileReader`, no Spark job, every reader closed. A file that
+    * is not readable Parquet (a truncated upload) throws, naming the
+    * file — corruption fails the aggregator loudly instead of excluding
+    * the shard.
+    */
+  private def footerFieldNames(spark: SparkSession,
+      uris: Seq[String]): Map[String, Set[String]] = {
+    val conf = spark.sessionState.newHadoopConf()
+    uris.map { uri =>
+      val reader = ParquetFileReader.open(
+        HadoopInputFile.fromPath(new Path(uri), conf))
+      try uri -> reader.getFileMetaData.getSchema.getFields.asScala
+        .map(_.getName).toSet
+      finally reader.close()
+    }.toMap
   }
 }

@@ -39,11 +39,12 @@ object StreamingProcessor {
       maxFilesPerTrigger: Int = 16,
       trigger: Trigger = Trigger.AvailableNow(),
       exactlyOnce: Boolean = false): StreamingQuery = {
-    // multiLine matches the batch twin's input contract (Sources.urlList:
-    // one pretty-printed JSON array of {url} objects per file — the
-    // reference's list format). Without it each array file parses as
-    // corrupt line-JSON, every url comes back null, and the checkpoint
-    // still commits the offsets — a stream that "succeeds" on zero rows.
+    // The same read as the batch twin, Sources.urlList: a pinned
+    // `url STRING` schema over one pretty-printed JSON array of {url}
+    // objects per file (the reference's list format), hence multiLine.
+    // Without multiLine each array file parses as corrupt line-JSON,
+    // every url comes back null, and the checkpoint still commits the
+    // offsets — a stream that "succeeds" on zero rows.
     val urls = spark.readStream
       .schema("url STRING")
       .option("maxFilesPerTrigger", maxFilesPerTrigger)

@@ -165,6 +165,38 @@ class EnrichSpec extends SparkSuite {
     forced.release(); inBound.release(); opted.release()
   }
 
+  test("a limit-bounded frame keeps the window form with no probe job") {
+    // an RDD-backed frame has no static row bound, so the window-bound
+    // check must run its probe job; limit(n) with n <= the bound proves
+    // the bound in the plan (as Sources.slice does for every processor
+    // batch) and enrich() then starts no job at all. A fixed
+    // numPartitions keeps Dedup.spread (whose partition count can
+    // materialize the window's input exchange) out of the count.
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    val fetcher = () => new SyntheticFetcher(
+      failFirstSuffix = "zz", alwaysFailPrefix = "zz")
+    val rows = (0 until 40).map(i => Row(f"https://example.org/b/$i%02d"))
+    val urls = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2),
+      StructType(Seq(StructField("url", StringType))))
+    def hasWindow(out: Enricher.Enriched) =
+      out.records.queryExecution.analyzed.collect {
+        case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
+      }.nonEmpty
+    val cfg = Enricher.Config(startIndex = 3, numPartitions = 2,
+      windowIndexMaxRows = 50)
+    val (probed, probeJobs) = jobsDuring(Enricher.enrich(urls, fetcher, cfg))
+    assert(probeJobs >= 1, "an unbounded frame must be probed")
+    assert(hasWindow(probed))
+    val (bounded, boundJobs) = jobsDuring(Enricher.enrich(urls.limit(30),
+      fetcher, cfg.copy(windowIndexMaxRows = 30)))
+    assert(boundJobs === 0, s"$boundJobs job(s) for a limit-bounded frame")
+    assert(hasWindow(bounded), "in-bound frame keeps the window form")
+    assert(bounded.records.select("batch_index").collect().map(_.getLong(0))
+      .sorted.toSeq === (3L until 33L))
+    probed.release(); bounded.release()
+  }
+
   test("media-type-conditional columns: offered section fields masked by type") {
     // a fetcher that OFFERS a volumetric-only field on EVERY page: the
     // P5 masking must null it for non-volumetric types and keep it for

@@ -22,6 +22,17 @@ class PipelineSpec extends SparkSuite {
     s"$dir/urls.json"
   }
 
+  /** `n` contract-conforming one-row shard files under `dir`. */
+  private def writeShards(dir: String, n: Int): Unit = {
+    import spark.implicits._
+    (0 until n).foreach { i =>
+      Seq((s"u$i", 0.1 * i, null: String, i.toLong, "Mesh"))
+        .toDF("url", "processing_time", "error", "batch_index", "media_type")
+        .coalesce(1).write.parquet(f"$dir/s$i%02d.parquet")
+    }
+    assert(graft.agg.Statistics.listParquetFiles(spark, dir).size === n)
+  }
+
   test("processor advances the cursor and writes shards + dead letters") {
     val urlPath = writeUrlList(100)
     val out = Files.createTempDirectory("graft-out").toString
@@ -260,6 +271,85 @@ class PipelineSpec extends SparkSuite {
     intercept[IllegalArgumentException] {
       Pipelines.aggregator(spark, s"$out/shards", s"$out/agg")
     }
+  }
+
+  test("aggregator fails loudly on a truncated shard") {
+    val out = Files.createTempDirectory("graft-trunc").toString
+    writeShards(s"$out/shards", 2)
+    // a real shard cut off mid-upload: its footer is gone
+    val whole = new java.io.File(s"$out/shards/s00.parquet").listFiles()
+      .find(_.getName.endsWith(".parquet")).get
+    val bytes = Files.readAllBytes(whole.toPath)
+    Files.write(java.nio.file.Path.of(s"$out/shards/zz_truncated.parquet"),
+      bytes.take(bytes.length / 2))
+    // not skipped, not excluded as a contract violator: the run fails,
+    // naming the file, and writes no artifact
+    val err = intercept[Exception] {
+      Pipelines.aggregator(spark, s"$out/shards", s"$out/agg")
+    }
+    val chain = Iterator.iterate(err: Throwable)(_.getCause)
+      .takeWhile(_ != null).map(e => Option(e.getMessage).getOrElse(""))
+      .mkString("\n")
+    assert(chain.contains("zz_truncated.parquet"), chain)
+    assert(!new java.io.File(s"$out/agg/statistics.json").exists)
+  }
+
+  test("aggregator sizes combined parts by bytes, floored at min(files, cores)") {
+    val out = Files.createTempDirectory("graft-sinks").toString
+    writeShards(s"$out/shards", 12)
+    def parts(dir: String, ext: String) = new java.io.File(dir).listFiles()
+      .count(f => f.getName.startsWith("part-") && f.getName.endsWith(ext))
+    val merged = Sources.parquetTreeMerged(spark, s"$out/shards")
+    def check(session: org.apache.spark.sql.SparkSession, agg: String,
+        expected: Int): Unit = {
+      val stats = Pipelines.aggregator(session, s"$out/shards", agg)
+      assert(parts(s"$agg/combined.parquet", ".parquet") === expected)
+      assert(parts(s"$agg/combined.csv", ".csv") === expected)
+      val pq = spark.read.parquet(s"$agg/combined.parquet")
+      val csv = spark.read.option("header", true).csv(s"$agg/combined.csv")
+      assert(stats.totalRecords === 12L)
+      assert(pq.columns.toSeq === merged.columns.toSeq)
+      assert(csv.columns.toSeq === merged.columns.toSeq)
+      assert(pq.collect().toSet === merged.collect().toSet)
+      assert(csv.count() === merged.count())
+    }
+    // ~12 KB is far below the default maxPartitionBytes, so the floor
+    // sets the count: min(12 files, defaultParallelism) parts where the
+    // shard-split scan wrote 12
+    check(spark, s"$out/agg",
+      math.min(12, spark.sparkContext.defaultParallelism))
+    // a maxPartitionBytes of a sixth of the input: the bytes set it
+    val bytes = graft.agg.Statistics
+      .listParquetFilesRaw(spark, s"$out/shards").map(_._3).sum
+    val small = spark.newSession()
+    small.conf.set("spark.sql.files.maxPartitionBytes", (bytes + 5) / 6)
+    check(small, s"$out/agg6", 6)
+  }
+
+  test("processor batch runs 4 jobs; aggregator jobs don't grow per shard") {
+    // pins the per-batch and per-file fixed cost: a job per batch for
+    // url-list schema inference or the window-bound probe, or a job per
+    // shard file for contract validation, shows up here
+    val urlPath = writeUrlList(100)
+    val out = Files.createTempDirectory("graft-jobs").toString
+    val (c, batchJobs) = jobsDuring(Pipelines.processor(spark, urlPath, out,
+      () => new SyntheticFetcher, maxRecords = 100,
+      cursorPath = s"$out/cursor.txt", totalTarget = 100,
+      enrichConfig = fastEnrich))
+    assert(c.totalProcessed === 100)
+    // the slice's shuffle map stage, the fetch pass into the cached
+    // enrichment, the shard write and the dead-letter write
+    assert(batchJobs === 4)
+    def aggJobs(files: Int): Int = {
+      val dir = Files.createTempDirectory("graft-aggjobs").toString
+      writeShards(s"$dir/shards", files)
+      val (stats, jobs) = jobsDuring(
+        Pipelines.aggregator(spark, s"$dir/shards", s"$dir/agg"))
+      assert(stats.totalRecords === files.toLong)
+      jobs
+    }
+    val (over3, over12) = (aggJobs(3), aggJobs(12))
+    assert(over3 === over12, s"3 shards: $over3 jobs, 12 shards: $over12")
   }
 
   test("text artifacts and cursor honor filesystem schemes (file://)") {

@@ -25,4 +25,38 @@ object TestSpark {
 abstract class SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.session
   def sfDir: String = TestSpark.sfDir
+
+  /** `body`'s result and the number of Spark jobs it started. Jobs are
+    * told apart by a thread-local property `body` inherits (so jobs of
+    * other threads don't count); the listener bus is asynchronous, so a
+    * marker job run after `body` — delivered in order — flushes it.
+    */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val key = "graft.spec.jobsDuring"
+    val tag = java.util.UUID.randomUUID().toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).map(_.getProperty(key)) match {
+          case Some(`tag`) => jobs.incrementAndGet()
+          case Some(t) if t == tag + "-marker" => flushed.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, tag)
+      val r = try body finally sc.setLocalProperty(key, tag + "-marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener bus never delivered the marker job")
+      (r, jobs.get)
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+  }
 }
