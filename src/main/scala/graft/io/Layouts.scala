@@ -162,6 +162,16 @@ object Layouts {
       .option("maxRecordsPerFile", maxRecordsPerFile)
       .parquet(dir)
 
+  /** Target file size of store compaction: [[compact]]'s and
+    * [[compactGenerational]]'s default, and the keyed ingest gates'
+    * store target (twice their graduation threshold). 512 MB: large
+    * enough that scan parallelism is set by data size, small enough
+    * that one generation merge (at most one residue file plus
+    * ~`maxStoreFiles` batch appends) stays a bounded fraction of a
+    * steady batch.
+    */
+  val StoreTargetBytes: Long = 512L << 20
+
   /** Compact a parquet directory into files near `targetBytes` — the
     * ACTION behind `Statistics.fileSizeProfile`'s small-file warning.
     * The target file count comes from the directory's on-disk byte
@@ -187,7 +197,7 @@ object Layouts {
     * @return the file count written (one per partition)
     */
   def compact(spark: org.apache.spark.sql.SparkSession, dir: String,
-      destDir: String, targetBytes: Long = 512L << 20): Int = {
+      destDir: String, targetBytes: Long = StoreTargetBytes): Int = {
     require(targetBytes > 0, "targetBytes must be positive")
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -198,98 +208,6 @@ object Layouts {
       .repartition(files)
       .write.mode("overwrite").parquet(destDir)
     files
-  }
-
-  /** Suffixes of [[compactInPlace]]'s staging directories. */
-  private[graft] val CompactTmpSuffix = "__compact"
-  private[graft] val CompactOldSuffix = "__old"
-
-  /** [[compact]] applied IN PLACE via a staged swap — the maintenance
-    * step a long-running ingest gate calls between micro-batches so its
-    * one-file-per-append stores never accumulate unbounded file counts
-    * (each scan pays listing + a footer read per file: the residual
-    * +73 ms/batch latency slope of the round-11 sustained profile).
-    *
-    * SINGLE-WRITER, NO-CONCURRENT-READER: between the two renames the
-    * store path does not exist, and on object stores (s3a) each rename
-    * is itself a non-atomic copy+delete — a reader concurrent with the
-    * swap (or a query holding a cached FileIndex over the old files)
-    * sees FileNotFoundException or a partially-visible store. The
-    * streaming gates satisfy this by construction (one sequential
-    * foreachBatch owns the store); any other caller must hold the same
-    * exclusivity for the duration of the call. For a store that must
-    * stay readable through maintenance, use [[compactGenerational]],
-    * whose live directory never disappears — but note its commits are
-    * consistent only under the single-owner read schedule (recovery
-    * before read): a reader CONCURRENT with any generational commit
-    * may transiently double-count rows (its scaladoc).
-    *
-    * A partitioned directory (subdirectories, e.g. Hive `col=value`
-    * layouts) is refused loudly: [[compact]] would silently flatten the
-    * layout.
-    *
-    * Sequence: write the compacted copy to `<dir>__compact`, rename
-    * `dir` → `<dir>__old`, rename the copy → `dir`, delete the old.
-    * Each rename is a single FS metadata operation; the data is never
-    * in only a partial state. A crash at ANY point is repaired by
-    * [[recoverCompaction]] (run it before reading the store):
-    *   - crash before the first rename: `dir` intact, stray tmp deleted;
-    *   - crash between the renames: `dir` missing but `<dir>__old`
-    *     complete — restored;
-    *   - crash after the second rename: `dir` is the compacted store,
-    *     stray old deleted.
-    * Recovery prefers the ORIGINAL (old) over a complete-looking tmp:
-    * the original is complete by construction, and re-running the
-    * compaction is cheap next to adjudicating a half-written copy.
-    *
-    * @return files written
-    */
-  def compactInPlace(spark: org.apache.spark.sql.SparkSession, dir: String,
-      targetBytes: Long = 512L << 20): Int = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val d = new org.apache.hadoop.fs.Path(dir)
-    val tmp = new org.apache.hadoop.fs.Path(dir + CompactTmpSuffix)
-    val old = new org.apache.hadoop.fs.Path(dir + CompactOldSuffix)
-    require(fs.exists(d), s"compactInPlace: $dir does not exist")
-    require(!fs.exists(old),
-      s"compactInPlace: stale $old — run recoverCompaction first")
-    require(!fs.listStatus(d).exists(_.isDirectory),
-      s"compactInPlace: $dir contains subdirectories — compacting a " +
-        "partitioned layout would silently flatten it; compact the leaf " +
-        "directories individually or re-write via the layout's own writer")
-    val files = compact(spark, dir, dir + CompactTmpSuffix, targetBytes)
-    if (!fs.rename(d, old))
-      throw new java.io.IOException(s"compactInPlace: rename $d -> $old failed")
-    if (!fs.rename(tmp, d)) {
-      // restore before surfacing: the store must never stay missing
-      fs.rename(old, d)
-      throw new java.io.IOException(s"compactInPlace: rename $tmp -> $d failed")
-    }
-    fs.delete(old, true)
-    files
-  }
-
-  /** Repair an interrupted [[compactInPlace]] — idempotent, cheap (two
-    * or three metadata calls), safe to run before every read of a
-    * compaction-managed store. Returns true when a crashed swap was
-    * actually repaired (the store had been left missing).
-    */
-  def recoverCompaction(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Boolean = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val d = new org.apache.hadoop.fs.Path(dir)
-    val tmp = new org.apache.hadoop.fs.Path(dir + CompactTmpSuffix)
-    val old = new org.apache.hadoop.fs.Path(dir + CompactOldSuffix)
-    val restored =
-      if (!fs.exists(d) && fs.exists(old)) fs.rename(old, d)
-      else false
-    // stray staging state from any other crash window: the old copy is
-    // redundant once dir exists, and a tmp is re-derivable at any time
-    if (fs.exists(d) && fs.exists(old)) fs.delete(old, true)
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    restored
   }
 
   /** Visible (non-hidden) file count of a store directory — the
@@ -377,9 +295,9 @@ object Layouts {
 
   /** GENERATIONAL (LSM-tiered) in-place compaction — the maintenance
     * step for an append-heavy store that must scale past
-    * `maxStoreFiles × targetBytes` bytes, where [[compactInPlace]]'s
-    * whole-store rewrite hits the r12 wall (every trigger rewrites the
-    * entire corpus, O(corpus) per micro-batch). Here each compaction
+    * `maxStoreFiles × targetBytes` bytes, where a whole-store rewrite
+    * hits the r12 wall (every trigger rewrites the entire corpus,
+    * O(corpus) per micro-batch). Here each compaction
     * folds ONLY the sub-graduation files — files smaller than
     * `targetBytes / 2`, i.e. recent one-file batch appends plus the
     * previous generations' still-growing residue — into files near
@@ -391,10 +309,10 @@ object Layouts {
     * its way to graduation (each merge at least doubles the residue it
     * rides in), not once per trigger for the store's lifetime.
     *
-    * Unlike [[compactInPlace]], the live directory NEVER disappears:
-    * the merge writes to a `<dir>__gen` staging directory, a one-file
-    * commit manifest ([[GenManifest]], created via tmp-write + rename)
-    * records the exact old→new file movement, staged files move in
+    * The live directory NEVER disappears: the merge writes to a
+    * `<dir>__gen` staging directory, a one-file commit manifest
+    * ([[GenManifest]], created via tmp-write + rename) records the
+    * exact old→new file movement, staged files move in
     * under their job-unique names, and the folded originals are
     * deleted. A crash at any point is repaired by
     * [[recoverGenerational]]: before the manifest exists the store is
@@ -418,7 +336,7 @@ object Layouts {
     *         nothing worth folding)
     */
   def compactGenerational(spark: org.apache.spark.sql.SparkSession,
-      dir: String, targetBytes: Long = 512L << 20): Int = {
+      dir: String, targetBytes: Long = StoreTargetBytes): Int = {
     require(targetBytes > 0, "targetBytes must be positive")
     stageGenerational(spark, dir, targetBytes) match {
       case None => 0

@@ -30,7 +30,6 @@ object Pipelines {
   def processor(spark: SparkSession, urlListPath: String, outDir: String,
       fetcherFactory: () => Fetcher, maxRecords: Int,
       cursorPath: String, totalTarget: Long = Long.MaxValue,
-      numPartitions: Int = 0,
       enrichConfig: Enricher.Config = Enricher.Config()): Cursor = {
     val cur = Cursor.read(cursorPath)
     val remaining = totalTarget - cur.totalProcessed
@@ -54,9 +53,7 @@ object Pipelines {
     val slice = Sources.slice(urls, "url", cur.nextIndex.toInt, take)
 
     val enriched = Enricher.enrich(slice, fetcherFactory,
-      enrichConfig.copy(startIndex = cur.nextIndex,
-        numPartitions =
-          if (numPartitions > 0) numPartitions else enrichConfig.numPartitions))
+      enrichConfig.copy(startIndex = cur.nextIndex))
 
     // A11 running counters ride on the sink jobs as observed metrics
     // (df.observe) instead of separate count() jobs. A batch runs four

@@ -279,6 +279,90 @@ object EventStreams {
       .toDF()
   }
 
+  /** The launch skeleton every file-stream ingest gate shares: register
+    * the graft functions on the CALLER's session (the gate bodies build
+    * frames from this handle, e.g. `spark.read.parquet`, which may be
+    * neither the batch thread's active session, the stream's clone, nor
+    * the default, so `ensureRegistered()` alone cannot reach it; the
+    * call is idempotent), materialize the gate's stream-lifetime
+    * `caches` once before the first batch, read `inDir` as a parquet
+    * file stream of `schema`, run `body(batch, batchId)` on every
+    * micro-batch, and start the query.
+    *
+    * Each frame in `caches` has one release path: it is unpersisted
+    * when the query terminates, or before the rethrow when the launch
+    * itself throws (missing input dir, corrupt or incompatible
+    * checkpoint). Without the latter, every failed launch in a
+    * long-lived session would leak one pinned copy of each model. An
+    * AvailableNow query over an empty input can terminate before the
+    * listener registers and miss the terminated event, so a
+    * post-registration `isActive` check releases eagerly in that case;
+    * unpersist and removeListener are idempotent, which makes the race
+    * the other way harmless. With no `caches`, no listener registers.
+    */
+  private def launchGate(spark: SparkSession, schema: StructType,
+      inDir: String, checkpointDir: String, maxFilesPerTrigger: Int,
+      trigger: Trigger, caches: DataFrame*)(
+      body: (DataFrame, Long) => Unit): StreamingQuery = {
+    def releaseAll(): Unit = caches.foreach(_.unpersist(blocking = false))
+    try {
+      graft.functions.GraftFunctions.register(spark)
+      caches.foreach(_.count())
+      val query = spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", maxFilesPerTrigger)
+        .parquet(inDir)
+        .writeStream
+        .foreachBatch(body)
+        .option("checkpointLocation", checkpointDir)
+        .trigger(trigger)
+        .start()
+      if (caches.nonEmpty) {
+        val release = new StreamingQueryListener {
+          override def onQueryStarted(
+              e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+          override def onQueryProgress(
+              e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+          override def onQueryTerminated(
+              e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+            if (e.id == query.id) {
+              releaseAll()
+              spark.streams.removeListener(this)
+            }
+        }
+        spark.streams.addListener(release)
+        if (!query.isActive) {
+          releaseAll()
+          spark.streams.removeListener(release)
+        }
+      }
+      query
+    } catch {
+      case e: Throwable =>
+        releaseAll()
+        throw e
+    }
+  }
+
+  private def pathExists(spark: SparkSession, dir: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  }
+
+  /** Drop `df`'s null-`textCol` rows when the corpus already holds one.
+    * The exact-dedup ops keep null-text rows by documented design (an
+    * md5-null anti-join key never matches), which at INGEST means a
+    * replayed contentless row re-appends on every crash replay. The
+    * gate-level rule matches [[graft.ops.Dedup.exactDedup]]'s null
+    * grouping — all contentless docs are one duplicate class — so at
+    * most one ever lands. Cost: one narrow null-predicate corpus scan
+    * with limit 1; non-null rows are untouched.
+    */
+  private def dropNullTextIfCorpusHasOne(df: DataFrame, corpus: DataFrame,
+      textCol: String): DataFrame =
+    df.join(corpus.where(col(textCol).isNull)
+        .select(lit(true).as("__corpus_has_null")).limit(1),
+      col(textCol).isNull && col("__corpus_has_null"), "left_anti")
+
   /** Continuous-ingest dedup: documents land in `inDir` as parquet; each
     * micro-batch is exact-deduped within itself AND against the corpus
     * at `corpusDir`, and only genuinely new content is appended — the
@@ -301,53 +385,22 @@ object EventStreams {
     * projection of `corpusDir`; store the corpus bucketed by fingerprint
     * and only the (small) batch shuffles — see `Dedup.incrementalDedup`.
     */
-  /** Drop `df`'s null-`textCol` rows when the corpus already holds one.
-    * The exact-dedup ops keep null-text rows by documented design (an
-    * md5-null anti-join key never matches), which at INGEST means a
-    * replayed contentless row re-appends on every crash replay. The
-    * gate-level rule matches [[graft.ops.Dedup.exactDedup]]'s null
-    * grouping — all contentless docs are one duplicate class — so at
-    * most one ever lands. Cost: one narrow null-predicate corpus scan
-    * with limit 1; non-null rows are untouched.
-    */
-  private def dropNullTextIfCorpusHasOne(df: DataFrame, corpus: DataFrame,
-      textCol: String): DataFrame =
-    df.join(corpus.where(col(textCol).isNull)
-        .select(lit(true).as("__corpus_has_null")).limit(1),
-      col(textCol).isNull && col("__corpus_has_null"), "left_anti")
-
   def ingestDedup(spark: SparkSession, schema: StructType, inDir: String,
       corpusDir: String, checkpointDir: String, idCol: String,
       textCol: String, maxFilesPerTrigger: Int = 16,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     import graft.ops.Dedup
-    // register on the CALLER's session up front: foreachBatch below
-    // builds frames from this handle (spark.read.parquet), which may be
-    // neither the batch thread's active session (the stream's clone)
-    // nor the default — ensureRegistered() alone cannot reach it
-    graft.functions.GraftFunctions.register(spark)
-    spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(inDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val cPath = new org.apache.hadoop.fs.Path(corpusDir)
-        val corpusExists = cPath
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .exists(cPath)
-        val fresh =
-          if (corpusExists) {
-            val corpus = spark.read.parquet(corpusDir)
-            dropNullTextIfCorpusHasOne(
-              Dedup.incrementalDedup(batch, corpus, idCol, textCol),
-              corpus, textCol)
-          } else Dedup.exactDedup(batch, idCol, textCol)
-        fresh.write.mode("append").parquet(corpusDir)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    launchGate(spark, schema, inDir, checkpointDir, maxFilesPerTrigger,
+        trigger) { (batch, _) =>
+      val fresh =
+        if (pathExists(spark, corpusDir)) {
+          val corpus = spark.read.parquet(corpusDir)
+          dropNullTextIfCorpusHasOne(
+            Dedup.incrementalDedup(batch, corpus, idCol, textCol),
+            corpus, textCol)
+        } else Dedup.exactDedup(batch, idCol, textCol)
+      fresh.write.mode("append").parquet(corpusDir)
+    }
   }
 
   /** [[ingestDedup]] with the Bloom pre-filter held across micro-batches:
@@ -375,54 +428,38 @@ object EventStreams {
       maxFilesPerTrigger: Int = 16,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     import graft.ops.Dedup
-    // register on the CALLER's session up front: foreachBatch below
-    // builds frames from this handle (spark.read.parquet), which may be
-    // neither the batch thread's active session (the stream's clone)
-    // nor the default — ensureRegistered() alone cannot reach it
-    graft.functions.GraftFunctions.register(spark)
-    import org.apache.spark.sql.functions.{col, md5}
     var bloom: Option[org.apache.spark.util.sketch.BloomFilter] = None
-    spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(inDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val cPath = new org.apache.hadoop.fs.Path(corpusDir)
-        val corpusExists = cPath
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .exists(cPath)
-        val bf = bloom.getOrElse {
-          val seeded =
-            if (corpusExists)
-              spark.read.parquet(corpusDir)
-                .select(md5(col(textCol)).as("__fp"))
-                .stat.bloomFilter("__fp", expectedCorpusItems, fpp)
-            else org.apache.spark.util.sketch.BloomFilter
-              .create(expectedCorpusItems, fpp)
-          bloom = Some(seeded)
-          seeded
-        }
-        val fresh =
-          (if (corpusExists) {
-            val corpus = spark.read.parquet(corpusDir)
-            dropNullTextIfCorpusHasOne(
-              Dedup.incrementalDedupBloom(batch, corpus, idCol, textCol,
-                expectedCorpusItems, fpp, bloom = Some(bf)),
-              corpus, textCol)
-          } else Dedup.exactDedup(batch, idCol, textCol)).persist()
-        try {
-          fresh.write.mode("append").parquet(corpusDir)
-          // identical geometry (items, fpp) → compatible bit arrays; the
-          // executor-side aggregate ships one filter to the driver
-          bf.mergeInPlace(
-            fresh.select(md5(col(textCol)).as("__fp"))
-              .stat.bloomFilter("__fp", expectedCorpusItems, fpp))
-        } finally fresh.unpersist(blocking = false)
-        ()
+    launchGate(spark, schema, inDir, checkpointDir, maxFilesPerTrigger,
+        trigger) { (batch, _) =>
+      val corpusExists = pathExists(spark, corpusDir)
+      val bf = bloom.getOrElse {
+        val seeded =
+          if (corpusExists)
+            spark.read.parquet(corpusDir)
+              .select(md5(col(textCol)).as("__fp"))
+              .stat.bloomFilter("__fp", expectedCorpusItems, fpp)
+          else org.apache.spark.util.sketch.BloomFilter
+            .create(expectedCorpusItems, fpp)
+        bloom = Some(seeded)
+        seeded
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+      val fresh =
+        (if (corpusExists) {
+          val corpus = spark.read.parquet(corpusDir)
+          dropNullTextIfCorpusHasOne(
+            Dedup.incrementalDedupBloom(batch, corpus, idCol, textCol,
+              expectedCorpusItems, fpp, bloom = Some(bf)),
+            corpus, textCol)
+        } else Dedup.exactDedup(batch, idCol, textCol)).persist()
+      try {
+        fresh.write.mode("append").parquet(corpusDir)
+        // identical geometry (items, fpp) → compatible bit arrays; the
+        // executor-side aggregate ships one filter to the driver
+        bf.mergeInPlace(
+          fresh.select(md5(col(textCol)).as("__fp"))
+            .stat.bloomFilter("__fp", expectedCorpusItems, fpp))
+      } finally fresh.unpersist(blocking = false)
+    }
   }
 
   /** Continuous-ingest NEAR-dedup: each micro-batch is collapsed
@@ -445,29 +482,16 @@ object EventStreams {
       bands: Int = 8, maxFilesPerTrigger: Int = 16,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     import graft.ops.Dedup
-    // register on the CALLER's session up front: foreachBatch below
-    // builds frames from this handle (spark.read.parquet), which may be
-    // neither the batch thread's active session (the stream's clone)
-    // nor the default — ensureRegistered() alone cannot reach it
-    graft.functions.GraftFunctions.register(spark)
-    import org.apache.spark.sql.functions.col
-    spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(inDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // probe pins (Dedup.pinSmall under incrementalNearDups) release
-        // when the batch's append completes — unscoped they'd accumulate
-        // in the CacheManager for the stream's lifetime (r14 advisor)
-        graft.ops.PinScope.withScope {
-        val cPath = new org.apache.hadoop.fs.Path(corpusDir)
-        val corpusExists = cPath
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .exists(cPath)
+    launchGate(spark, schema, inDir, checkpointDir, maxFilesPerTrigger,
+        trigger) { (batch, _) =>
+      // probe pins (Dedup.pinSmall under incrementalNearDups) release
+      // when the batch's append completes — unscoped they'd accumulate
+      // in the CacheManager for the stream's lifetime (r14 advisor)
+      graft.ops.PinScope.withScope {
         val local = Dedup.nearDupPipeline(batch, idCol, textCol, threshold,
           numHashes, bands)
         val fresh =
-          if (corpusExists) {
+          if (pathExists(spark, corpusDir)) {
             val corpus = spark.read.parquet(corpusDir)
             // exact replay guard FIRST: near-LINKING self-filters a
             // replay only when its content can collide and verify — an
@@ -477,7 +501,7 @@ object EventStreams {
             // so this also covers null-text rows. The corpus is read
             // per batch here anyway (the unkeyed form); this adds one
             // narrow fingerprint projection of it.
-            val fp = org.apache.spark.sql.functions.xxhash64(col(textCol))
+            val fp = xxhash64(col(textCol))
             val novel = local.withColumn("__xfp", fp)
               .join(corpus.select(fp.as("__xfp")), Seq("__xfp"), "left_anti")
               .drop("__xfp")
@@ -487,13 +511,26 @@ object EventStreams {
             novel.join(linked, Seq(idCol), "left_anti")
           } else local
         fresh.write.mode("append").parquet(corpusDir)
-        }
-        ()
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    }
   }
+
+  /** Default store-file-count compaction trigger of the keyed ingest
+    * gates: at one appended file per micro-batch per store, a store is
+    * compacted roughly every `DefaultMaxStoreFiles` batches — frequent
+    * enough to keep per-batch listing/footer work bounded (the
+    * round-11 sustained profile's residual slope), rare enough that the
+    * generation-sized rewrite amortizes to a small per-batch tax.
+    * Since round 13 the trigger counts only SUB-GRADUATION files
+    * ([[graft.io.Layouts.smallFileCount]]) and the rewrite is
+    * generational ([[graft.io.Layouts.compactGenerational]]) — files
+    * that reached half of [[graft.io.Layouts.StoreTargetBytes]] never
+    * count against the trigger nor get rewritten, so per-batch
+    * maintenance work stays O(new data) at ANY store size instead of
+    * degrading to whole-corpus rewrites past `maxStoreFiles ×
+    * StoreTargetBytes` bytes (the r12 verdict's compaction wall).
+    */
+  val DefaultMaxStoreFiles: Int = 64
 
   /** [[ingestNearDup]] with a PERSISTENT corpus band-key table
     * (`keysDir`) maintained alongside the corpus — the steady-state
@@ -525,59 +562,19 @@ object EventStreams {
     * corpus-wide anti-join runs once at (re)start, and the re-key job
     * only on actual recovery.
     */
-  /** Default store-file-count compaction trigger of the keyed ingest
-    * gates: at one appended file per micro-batch per store, a store is
-    * compacted roughly every `DefaultMaxStoreFiles` batches — frequent
-    * enough to keep per-batch listing/footer work bounded (the
-    * round-11 sustained profile's residual slope), rare enough that the
-    * generation-sized rewrite amortizes to a small per-batch tax.
-    * Since round 13 the trigger counts only SUB-GRADUATION files
-    * ([[graft.io.Layouts.smallFileCount]]) and the rewrite is
-    * generational ([[graft.io.Layouts.compactGenerational]]) — files
-    * that reached `targetBytes / 2` never count against the trigger
-    * nor get rewritten, so per-batch maintenance work stays O(new
-    * data) at ANY store size instead of degrading to whole-corpus
-    * rewrites past `maxStoreFiles × targetBytes` bytes (the r12
-    * verdict's compaction wall).
-    */
-  val DefaultMaxStoreFiles: Int = 64
-
-  /** Default target (and 2× the graduation threshold) for the keyed
-    * gates' generational store compaction — [[graft.io.Layouts
-    * .compactGenerational]]'s `targetBytes`. 512 MB: large enough that
-    * scan parallelism is set by data size, small enough that one
-    * generation merge (≤ one residue file + ~`maxStoreFiles` batch
-    * appends) stays a bounded fraction of a steady batch.
-    */
-  val DefaultStoreTargetBytes: Long = 512L << 20
-
   def ingestNearDupKeyed(spark: SparkSession, schema: StructType,
       inDir: String, corpusDir: String, keysDir: String,
       checkpointDir: String, idCol: String, textCol: String,
       threshold: Double, numHashes: Int = 16, bands: Int = 8,
       maxFilesPerTrigger: Int = 16,
       trigger: Trigger = Trigger.AvailableNow(),
-      maxStoreFiles: Int = DefaultMaxStoreFiles,
-      targetBytes: Long = DefaultStoreTargetBytes): StreamingQuery = {
-    // register on the CALLER's session up front: foreachBatch below
-    // builds frames from this handle (spark.read.parquet), which may be
-    // neither the batch thread's active session (the stream's clone)
-    // nor the default — ensureRegistered() alone cannot reach it
-    graft.functions.GraftFunctions.register(spark)
+      maxStoreFiles: Int = DefaultMaxStoreFiles): StreamingQuery = {
     val healed = new java.util.concurrent.atomic.AtomicBoolean(false)
-    spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(inDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        ingestNearDupKeyedBatch(spark, batch, corpusDir, keysDir, idCol,
-          textCol, threshold, numHashes, bands, healed, maxStoreFiles,
-          targetBytes)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    launchGate(spark, schema, inDir, checkpointDir, maxFilesPerTrigger,
+        trigger) { (batch, _) =>
+      ingestNearDupKeyedBatch(spark, batch, corpusDir, keysDir, idCol,
+        textCol, threshold, numHashes, bands, healed, maxStoreFiles)
+    }
   }
 
   /** One [[ingestNearDupKeyed]] micro-batch, as a directly callable
@@ -591,11 +588,10 @@ object EventStreams {
       batch: DataFrame, corpusDir: String, keysDir: String, idCol: String,
       textCol: String, threshold: Double, numHashes: Int, bands: Int,
       healed: java.util.concurrent.atomic.AtomicBoolean,
-      maxStoreFiles: Int = DefaultMaxStoreFiles,
-      targetBytes: Long = DefaultStoreTargetBytes): Unit = {
+      maxStoreFiles: Int = DefaultMaxStoreFiles): Unit = {
     import graft.ops.Dedup
     keyedIngestBatch(spark, batch, corpusDir, keysDir, idCol, textCol,
-      healed, maxStoreFiles, targetBytes)(
+      healed, maxStoreFiles)(
       collapse = b => Dedup.nearDupPipeline(b, idCol, textCol, threshold,
         numHashes, bands),
       bandKeys = df => Dedup.corpusBandKeys(df, idCol, textCol, numHashes,
@@ -639,25 +635,16 @@ object EventStreams {
   private def keyedIngestBatch(spark: SparkSession, batch: DataFrame,
       corpusDir: String, keysDir: String, idCol: String,
       contentCol: String, healed: java.util.concurrent.atomic.AtomicBoolean,
-      maxStoreFiles: Int = DefaultMaxStoreFiles,
-      targetBytes: Long = DefaultStoreTargetBytes)(
+      maxStoreFiles: Int)(
       collapse: DataFrame => DataFrame,
       bandKeys: DataFrame => DataFrame,
       linkedIds: (DataFrame, DataFrame, DataFrame) => DataFrame): Unit = {
-    import org.apache.spark.sql.functions.{col, lit, xxhash64}
-    // repair any interrupted store compaction BEFORE the existence
-    // check: a crash mid-swap leaves the store under its __old name
-    // (legacy whole-store swap) or with an uncommitted/unapplied
-    // generation (manifest roll-forward) — and reading "corpus
-    // missing" then would silently restart the corpus from this
-    // batch. Idempotent metadata-only calls on the healthy path.
-    graft.io.Layouts.recoverCompaction(spark, corpusDir)
-    graft.io.Layouts.recoverCompaction(spark, keysDir)
+    // roll a crashed generational fold forward BEFORE either store is
+    // read (read-consistent only recovery-before-read; see
+    // compactGenerational). Metadata-only on the healthy path.
     graft.io.Layouts.recoverGenerational(spark, corpusDir)
     graft.io.Layouts.recoverGenerational(spark, keysDir)
-    val fs = new org.apache.hadoop.fs.Path(corpusDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val corpusExists = fs.exists(new org.apache.hadoop.fs.Path(corpusDir))
+    val corpusExists = pathExists(spark, corpusDir)
     def withExactKeys(df: DataFrame): DataFrame =
       bandKeys(df).unionByName(df.select(col(idCol),
         lit(-1).as("band"), xxhash64(col(contentCol)).as("key")))
@@ -686,7 +673,7 @@ object EventStreams {
         // only for the usually-empty unkeyed sliver, via a semi-join
         // back
         if (healed.compareAndSet(false, true)) {
-          val keysExist = fs.exists(new org.apache.hadoop.fs.Path(keysDir))
+          val keysExist = pathExists(spark, keysDir)
           val unkeyedIds =
             if (keysExist)
               corpus.select(col(idCol)).join(
@@ -726,9 +713,8 @@ object EventStreams {
       // and footer-read ~1600 files per store on each of its corpus/keys
       // scans, measured as a +280 ms/batch latency slope in the
       // sustained profile (r11_streaming_profile.json) while per-batch
-      // match work stayed constant. A long-running ingest should still
-      // compact periodically ([[graft.io.Layouts.compact]]); one file
-      // per batch makes the slope shallow instead of steep.
+      // match work stayed constant. One file per batch makes the slope
+      // shallow; the generational fold below bounds what remains.
       freshP.coalesce(1).write.mode("append").parquet(corpusDir)
       withExactKeys(freshP).coalesce(1).write.mode("append").parquet(keysDir)
     } finally freshP.unpersist(blocking = false)
@@ -738,29 +724,29 @@ object EventStreams {
     // BOTH stores still gain a file per batch and every later batch
     // re-lists and footer-reads them all on each of its corpus/keys
     // scans — the residual +73 ms/batch slope of the round-11
-    // sustained profile. When a store accumulates more than
-    // `maxStoreFiles` SUB-GRADUATION files (< targetBytes/2 — batch
-    // appends and generation residue; graduated files never count),
-    // only those files fold into a new generation through the
-    // manifest-committed, crash-recoverable merge above. Per-batch
-    // maintenance work is bounded by the generation size — O(new
-    // data), never O(corpus) — which is also what keeps the
-    // compaction stall (the r12 profile's p99 2.5-4× p50) bounded as
-    // the corpus grows: the r12 whole-store rewrite stalled the
-    // stream for a corpus-sized write, and past maxStoreFiles ×
-    // targetBytes of store its raw-count trigger re-fired EVERY batch
-    // (the r12 compaction wall). maxStoreFiles <= 0 disables (the
-    // parity/off switch for specs).
-    if (maxStoreFiles > 0) {
-      Seq(corpusDir, keysDir).foreach { d =>
-        if (graft.io.Layouts.smallFileCount(spark, d,
-            math.max(1L, targetBytes / 2)) > maxStoreFiles) {
-          graft.io.Layouts.compactGenerational(spark, d, targetBytes)
-          ()
-        }
-      }
-    }
+    // sustained profile. [[foldStore]] folds only sub-graduation files
+    // into a new generation, so per-batch maintenance work is bounded
+    // by the generation size — O(new data), never O(corpus) — and so
+    // is the compaction stall as the corpus grows.
+    foldStore(spark, corpusDir, maxStoreFiles)
+    foldStore(spark, keysDir, maxStoreFiles)
   }
+
+  /** Fold `dir`'s sub-graduation files (below half of
+    * [[graft.io.Layouts.StoreTargetBytes]]: batch appends and
+    * generation residue; graduated files never count) into a new
+    * generation once more than `maxStoreFiles` of them have piled up,
+    * through the manifest-committed, crash-recoverable
+    * [[graft.io.Layouts.compactGenerational]]. `maxStoreFiles <= 0`
+    * disables (the parity/off switch for specs).
+    */
+  private def foldStore(spark: SparkSession, dir: String,
+      maxStoreFiles: Int): Unit =
+    if (maxStoreFiles > 0 && graft.io.Layouts.smallFileCount(spark, dir,
+        graft.io.Layouts.StoreTargetBytes / 2) > maxStoreFiles) {
+      graft.io.Layouts.compactGenerational(spark, dir)
+      ()
+    }
 
   /** [[ingestNearDupKeyed]] for the EMBEDDING modality — the streaming
     * gate that keeps a vector corpus near-duplicate-free as batches
@@ -791,24 +777,14 @@ object EventStreams {
       threshold: Double, planesPerBand: Int = 8, bands: Int = 4,
       maxFilesPerTrigger: Int = 16,
       trigger: Trigger = Trigger.AvailableNow(),
-      maxStoreFiles: Int = DefaultMaxStoreFiles,
-      targetBytes: Long = DefaultStoreTargetBytes): StreamingQuery = {
-    // register on the CALLER's session up front (see ingestNearDupKeyed)
-    graft.functions.GraftFunctions.register(spark)
+      maxStoreFiles: Int = DefaultMaxStoreFiles): StreamingQuery = {
     val healed = new java.util.concurrent.atomic.AtomicBoolean(false)
-    spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(inDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        ingestEmbeddingNearDupKeyedBatch(spark, batch, corpusDir, keysDir,
-          idCol, vecCol, threshold, planesPerBand, bands, healed,
-          maxStoreFiles, targetBytes)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    launchGate(spark, schema, inDir, checkpointDir, maxFilesPerTrigger,
+        trigger) { (batch, _) =>
+      ingestEmbeddingNearDupKeyedBatch(spark, batch, corpusDir, keysDir,
+        idCol, vecCol, threshold, planesPerBand, bands, healed,
+        maxStoreFiles)
+    }
   }
 
   /** One [[ingestEmbeddingNearDupKeyed]] micro-batch, directly callable
@@ -819,12 +795,10 @@ object EventStreams {
       batch: DataFrame, corpusDir: String, keysDir: String, idCol: String,
       vecCol: String, threshold: Double, planesPerBand: Int, bands: Int,
       healed: java.util.concurrent.atomic.AtomicBoolean,
-      maxStoreFiles: Int = DefaultMaxStoreFiles,
-      targetBytes: Long = DefaultStoreTargetBytes): Unit = {
+      maxStoreFiles: Int = DefaultMaxStoreFiles): Unit = {
     import graft.ops.{Dedup, Similarity}
-    import org.apache.spark.sql.functions.{col, row_number, xxhash64}
     keyedIngestBatch(spark, batch, corpusDir, keysDir, idCol, vecCol,
-      healed, maxStoreFiles, targetBytes)(
+      healed, maxStoreFiles)(
       collapse = { b =>
         // exact within-batch collapse FIRST (the text flavor gets this
         // from nearDupPipeline's exactDedup): byte-identical vectors —
@@ -883,23 +857,12 @@ object EventStreams {
       vecCol: String, codebooks: Array[Array[Array[Float]]],
       centroids: Array[Array[Float]], maxFilesPerTrigger: Int = 16,
       trigger: Trigger = Trigger.AvailableNow(),
-      maxStoreFiles: Int = DefaultMaxStoreFiles,
-      targetBytes: Long = DefaultStoreTargetBytes): StreamingQuery = {
-    // register on the CALLER's session up front (see ingestNearDupKeyed)
-    graft.functions.GraftFunctions.register(spark)
-    spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(inDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        ingestPqIndexBatch(spark, batch, codesDir, idCol, vecCol,
-          codebooks, centroids, maxStoreFiles, targetBytes)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
-  }
+      maxStoreFiles: Int = DefaultMaxStoreFiles): StreamingQuery =
+    launchGate(spark, schema, inDir, checkpointDir, maxFilesPerTrigger,
+        trigger) { (batch, _) =>
+      ingestPqIndexBatch(spark, batch, codesDir, idCol, vecCol,
+        codebooks, centroids, maxStoreFiles)
+    }
 
   /** One [[ingestPqIndex]] micro-batch, directly callable (the
     * profiling/parity seam, like the other gates' `*Batch` twins).
@@ -910,8 +873,7 @@ object EventStreams {
     * this gate's own replay-guard reads pay growing listing/footer
     * work — the keyed gates' r11 slope, per cell. The same
     * generational policy applies PER CELL DIRECTORY (cell dirs are
-    * flat stores): when a cell exceeds `maxStoreFiles` sub-graduation
-    * files, only those fold ([[graft.io.Layouts.compactGenerational]]).
+    * flat stores): [[foldStore]] on each of the batch's cells.
     * Work per batch is bounded by (batch's cells × generation size) —
     * never index-sized. Crash recovery rides the manifest roll-forward
     * ([[graft.io.Layouts.recoverGenerational]]), run on the batch's
@@ -927,8 +889,7 @@ object EventStreams {
       batch: DataFrame, codesDir: String, idCol: String, vecCol: String,
       codebooks: Array[Array[Array[Float]]],
       centroids: Array[Array[Float]],
-      maxStoreFiles: Int = DefaultMaxStoreFiles,
-      targetBytes: Long = DefaultStoreTargetBytes): Unit = {
+      maxStoreFiles: Int = DefaultMaxStoreFiles): Unit = {
     import graft.ops.Similarity
     val encoded = Similarity.pqEncode(
         Similarity.ivfAssign(batch.select(col(idCol), col(vecCol)),
@@ -996,67 +957,13 @@ object EventStreams {
       // per-cell generational fold (scaladoc above): only the batch's
       // own cells are checked — per-batch maintenance cost is bounded
       // by the batch's cell count, never the index's
-      if (maxStoreFiles > 0) {
-        cells.foreach { c =>
-          val d = new org.apache.hadoop.fs.Path(base, s"centroid_id=$c")
-            .toString
-          if (graft.io.Layouts.smallFileCount(spark, d,
-              math.max(1L, targetBytes / 2)) > maxStoreFiles) {
-            graft.io.Layouts.compactGenerational(spark, d, targetBytes)
-            ()
-          }
-        }
+      cells.foreach { c =>
+        foldStore(spark,
+          new org.apache.hadoop.fs.Path(base, s"centroid_id=$c").toString,
+          maxStoreFiles)
       }
     } finally { encoded.unpersist(blocking = false); () }
   }
-
-  /** Release `caches` when `query` terminates, then deregister the
-    * listener. An AvailableNow query over an empty input can terminate
-    * before the listener registers and the terminated event would be
-    * missed, so a post-registration `isActive` check releases eagerly in
-    * that case — unpersist/removeListener are idempotent, making the
-    * double-fire race the other way harmless. Shared by every ingest
-    * gate that persists stream-lifetime model frames; the subtle
-    * early-termination handling lives here once instead of per-gate.
-    */
-  private def releaseOnTermination(spark: SparkSession,
-      query: StreamingQuery, caches: DataFrame*): StreamingQuery = {
-    def releaseAll(): Unit = caches.foreach(_.unpersist(blocking = false))
-    val release = new StreamingQueryListener {
-      override def onQueryStarted(
-          e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryProgress(
-          e: StreamingQueryListener.QueryProgressEvent): Unit = ()
-      override def onQueryTerminated(
-          e: StreamingQueryListener.QueryTerminatedEvent): Unit =
-        if (e.id == query.id) {
-          releaseAll()
-          spark.streams.removeListener(this)
-        }
-    }
-    spark.streams.addListener(release)
-    if (!query.isActive) {
-      releaseAll()
-      spark.streams.removeListener(release)
-    }
-    query
-  }
-
-  /** Start a gate query (`mkQuery` is the `.start()` call) and attach
-    * [[releaseOnTermination]] for its stream-lifetime `caches`. If
-    * starting THROWS (corrupt/incompatible checkpoint, bad input dir),
-    * the caches release before the rethrow — without this, every failed
-    * launch attempt in a long-lived session leaks one pinned copy of
-    * each model, exactly the accumulation the gates' scaladoc forbids.
-    */
-  private def startReleasing(spark: SparkSession, caches: Seq[DataFrame])(
-      mkQuery: => StreamingQuery): StreamingQuery =
-    try releaseOnTermination(spark, mkQuery, caches: _*)
-    catch {
-      case e: Throwable =>
-        caches.foreach(_.unpersist(blocking = false))
-        throw e
-    }
 
   /** Streaming decontamination gate: each micro-batch drops documents
     * sharing at least `minOverlap` distinct word `n`-gram shingles with
@@ -1072,9 +979,9 @@ object EventStreams {
     * per-batch work is the batch's own shingling plus a broadcast join,
     * independent of stream age and benchmark re-reads. The persist
     * lives for the query's lifetime (eval-set-sized driver+executor
-    * memory) and is released by a termination listener when the query
-    * ends — repeated gate launches in a long-lived session must not
-    * accumulate leaked cached storage.
+    * memory) and is released when the query ends or its launch fails
+    * ([[launchGate]]) — repeated gate launches in a long-lived session
+    * must not accumulate leaked cached storage.
     */
   def ingestDecontaminated(spark: SparkSession, schema: StructType,
       inDir: String, benchDir: String, outDir: String,
@@ -1085,26 +992,16 @@ object EventStreams {
     // silently stricter streaming default (3-grams flag common phrases)
     // would drop documents the batch pipeline keeps
     import graft.ops.Decontamination
-    import org.apache.spark.sql.functions.col
     val shingles = Decontamination
       .benchShingles(spark.read.parquet(benchDir), textCol, n)
       .persist()
-    shingles.count() // materialize once, before the first batch
-    startReleasing(spark, Seq(shingles)) { spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(inDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val flagged = Decontamination.contaminationScoresWithShingles(
-            batch, shingles, idCol, textCol, n, minOverlap)
-          .select(col(idCol))
-        batch.join(flagged, Seq(idCol), "left_anti")
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    launchGate(spark, schema, inDir, checkpointDir, maxFilesPerTrigger,
+        trigger, shingles) { (batch, _) =>
+      val flagged = Decontamination.contaminationScoresWithShingles(
+          batch, shingles, idCol, textCol, n, minOverlap)
+        .select(col(idCol))
+      batch.join(flagged, Seq(idCol), "left_anti")
+        .write.mode("append").parquet(outDir)
     }
   }
 
@@ -1121,8 +1018,7 @@ object EventStreams {
     * the broadcastable side of every batch's join), and reused by every
     * micro-batch; per-batch work is the batch's own feature hashing
     * plus two bucket-key joins, independent of stream age. The persists
-    * are released by a termination listener, as in
-    * [[ingestDecontaminated]].
+    * are released as in [[ingestDecontaminated]].
     */
   def ingestImportanceGated(spark: SparkSession, schema: StructType,
       inDir: String, targetDir: String, rawDir: String, outDir: String,
@@ -1131,28 +1027,18 @@ object EventStreams {
       maxFilesPerTrigger: Int = 16,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     import graft.ops.Sampling
-    import org.apache.spark.sql.functions.{broadcast, col}
     val tModel = Sampling.importanceModel(
       spark.read.parquet(targetDir), textCol, buckets).persist()
     val rModel = Sampling.importanceModel(
       spark.read.parquet(rawDir), textCol, buckets).persist()
-    tModel.count(); rModel.count() // materialize once, before batch 1
-    startReleasing(spark, Seq(tModel, rModel)) { spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(inDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val keep = Sampling.importanceWeightsWithModels(batch, idCol,
-            textCol, broadcast(tModel), broadcast(rModel), buckets, alpha)
-          .where(col("logw") >= minLogw)
-          .select(col(idCol))
-        batch.join(keep, Seq(idCol), "left_semi")
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    launchGate(spark, schema, inDir, checkpointDir, maxFilesPerTrigger,
+        trigger, tModel, rModel) { (batch, _) =>
+      val keep = Sampling.importanceWeightsWithModels(batch, idCol,
+          textCol, broadcast(tModel), broadcast(rModel), buckets, alpha)
+        .where(col("logw") >= minLogw)
+        .select(col(idCol))
+      batch.join(keep, Seq(idCol), "left_semi")
+        .write.mode("append").parquet(outDir)
     }
   }
 
@@ -1168,7 +1054,7 @@ object EventStreams {
     * per-class doc counts are trained ONCE at stream start and
     * persisted; per-batch work is the batch's own tokenization plus the
     * token-key model join — independent of stream age and of training
-    * size. Both caches are released by a termination listener.
+    * size. Both caches are released as in [[ingestDecontaminated]].
     */
   def ingestClassified(spark: SparkSession, schema: StructType,
       inDir: String, trainDir: String, outDir: String,
@@ -1177,28 +1063,17 @@ object EventStreams {
       maxFilesPerTrigger: Int = 16,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     import graft.ops.Classify
-    import org.apache.spark.sql.functions.col
     val train = spark.read.parquet(trainDir)
     val model = Classify.trainNaiveBayes(train, labelCol, textCol).persist()
     val classDocs = Classify.nbClassDocs(train, labelCol).persist()
-    model.count(); classDocs.count() // materialize once, before batch 1
-    startReleasing(spark, Seq(model, classDocs)) {
-      spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", maxFilesPerTrigger)
-        .parquet(inDir)
-        .writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val keep = Classify.nbPredictWithModel(batch, model, classDocs,
-              idCol, textCol)
-            .where(col("predicted").isin(keepLabels.map(x => x: Any): _*))
-            .select(col(idCol))
-          batch.join(keep, Seq(idCol), "left_semi")
-            .write.mode("append").parquet(outDir)
-          ()
-        }
-        .option("checkpointLocation", checkpointDir)
-        .trigger(trigger)
-        .start()
+    launchGate(spark, schema, inDir, checkpointDir, maxFilesPerTrigger,
+        trigger, model, classDocs) { (batch, _) =>
+      val keep = Classify.nbPredictWithModel(batch, model, classDocs,
+          idCol, textCol)
+        .where(col("predicted").isin(keepLabels.map(x => x: Any): _*))
+        .select(col(idCol))
+      batch.join(keep, Seq(idCol), "left_semi")
+        .write.mode("append").parquet(outDir)
     }
   }
 
@@ -1218,36 +1093,25 @@ object EventStreams {
       buckets: Int = 10000, maxFilesPerTrigger: Int = 16,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     import graft.ops.{Sampling, TextAnalysis}
-    import org.apache.spark.sql.functions.{col, lit}
     val refModel = Sampling.importanceModel(
       spark.read.parquet(referenceDir), textCol, buckets).persist()
-    refModel.count() // materialize once, before batch 1
-    startReleasing(spark, Seq(refModel)) {
-      spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", maxFilesPerTrigger)
-        .parquet(inDir)
-        .writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // Monitor row FIRST: if the second write fails the batch
-          // replays, and the monitor table dedups by batch_id. The
-          // primary data sink has no such key in its rows, so it writes
-          // the StreamingProcessor exactlyOnce way instead: each batch
-          // OVERWRITES its own micro_batch_id=N partition directory —
-          // a replay rewrites the same partition rather than appending
-          // a second copy of committed data rows (readers see
-          // micro_batch_id as a partition column).
-          TextAnalysis.textDriftAgainstModel(batch, textCol, refModel,
-              buckets)
-            .select(lit(batchId).as("batch_id"), col("n_features"),
-              col("tv"))
-            .write.mode("append").parquet(monitorDir)
-          batch.write.mode("overwrite")
-            .parquet(s"$outDir/micro_batch_id=$batchId")
-          ()
-        }
-        .option("checkpointLocation", checkpointDir)
-        .trigger(trigger)
-        .start()
+    launchGate(spark, schema, inDir, checkpointDir, maxFilesPerTrigger,
+        trigger, refModel) { (batch, batchId) =>
+      // Monitor row FIRST: if the second write fails the batch
+      // replays, and the monitor table dedups by batch_id. The
+      // primary data sink has no such key in its rows, so it writes
+      // the StreamingProcessor exactlyOnce way instead: each batch
+      // OVERWRITES its own micro_batch_id=N partition directory —
+      // a replay rewrites the same partition rather than appending
+      // a second copy of committed data rows (readers see
+      // micro_batch_id as a partition column).
+      TextAnalysis.textDriftAgainstModel(batch, textCol, refModel,
+          buckets)
+        .select(lit(batchId).as("batch_id"), col("n_features"),
+          col("tv"))
+        .write.mode("append").parquet(monitorDir)
+      batch.write.mode("overwrite")
+        .parquet(s"$outDir/micro_batch_id=$batchId")
     }
   }
 

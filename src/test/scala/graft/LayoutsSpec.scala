@@ -179,65 +179,6 @@ class LayoutsSpec extends SparkSuite {
     assert(nEx(p) <= nEx(pi), s"stored=${nEx(p)} inline=${nEx(pi)}\n$p")
   }
 
-  test("compactInPlace swaps safely; recoverCompaction repairs every crash window") {
-    import spark.implicits._
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-compact-swap").toString
-    val dir = s"$base/store"
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def p(s: String) = new org.apache.hadoop.fs.Path(s)
-    def rows() = spark.read.parquet(dir)
-      .collect().map(_.getLong(0)).sorted.toSeq
-    // a many-small-files store: 12 single-row appends
-    (1L to 12L).foreach(i =>
-      Seq(i).toDF("id").coalesce(1).write.mode("append").parquet(dir))
-    val before = rows()
-    assert(Layouts.dataFileCount(spark, dir) === 12)
-    // happy path: same rows, fewer files, no staging leftovers
-    Layouts.compactInPlace(spark, dir)
-    assert(rows() === before)
-    assert(Layouts.dataFileCount(spark, dir) < 12)
-    assert(!fs.exists(p(dir + "__compact")) && !fs.exists(p(dir + "__old")))
-    // crash window 1: died after writing the tmp copy, before any
-    // rename — recovery deletes the stray tmp, store untouched
-    spark.read.parquet(dir).write.parquet(dir + "__compact")
-    assert(!Layouts.recoverCompaction(spark, dir))
-    assert(!fs.exists(p(dir + "__compact")) && rows() === before)
-    // crash window 2: died BETWEEN the renames — the store is missing,
-    // the original is under __old (tmp may also exist) — recovery must
-    // restore the original, preferring it over the tmp copy
-    spark.read.parquet(dir).write.parquet(dir + "__compact")
-    assert(fs.rename(p(dir), p(dir + "__old")))
-    assert(Layouts.recoverCompaction(spark, dir))
-    assert(rows() === before)
-    assert(!fs.exists(p(dir + "__compact")) && !fs.exists(p(dir + "__old")))
-    // crash window 3: died after the second rename — store is the
-    // compacted copy, __old is redundant; recovery just cleans it
-    spark.read.parquet(dir).write.parquet(dir + "__old")
-    assert(!Layouts.recoverCompaction(spark, dir))
-    assert(!fs.exists(p(dir + "__old")) && rows() === before)
-    // a stale __old blocks a new compaction until recovered
-    spark.read.parquet(dir).write.parquet(dir + "__old")
-    intercept[IllegalArgumentException] { Layouts.compactInPlace(spark, dir) }
-    Layouts.recoverCompaction(spark, dir)
-    assert(Layouts.compactInPlace(spark, dir) >= 1 && rows() === before)
-  }
-
-  test("compactInPlace refuses a partitioned store instead of flattening it") {
-    import spark.implicits._
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-compact-hive").toString
-    // a partitioned directory is refused loudly: compacting it would
-    // silently flatten the layout
-    (1L to 200L).toDF("id").withColumn("part", $"id" % 3)
-      .write.partitionBy("part").parquet(s"$base/hive")
-    val e = intercept[IllegalArgumentException] {
-      Layouts.compactInPlace(spark, s"$base/hive")
-    }
-    assert(e.getMessage.contains("subdirectories"))
-  }
-
   test("compactGenerational folds only sub-graduation files; crash windows roll forward") {
     import spark.implicits._
     val base = java.nio.file.Files

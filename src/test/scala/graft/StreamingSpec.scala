@@ -435,6 +435,37 @@ class StreamingSpec extends SparkSuite {
       "shingle cache leaked after query termination")
   }
 
+  test("a gate whose launch throws rethrows and releases its cached frame") {
+    import spark.implicits._
+    import org.apache.spark.storage.StorageLevel
+    val bench = tmp("decon-fail-bench") + "/data"
+    val missingIn = tmp("decon-fail-in") + "/absent"
+    val ckpt = tmp("decon-fail-ckpt")
+    val schema = org.apache.spark.sql.types.StructType.fromDDL(
+      "doc_id LONG, text STRING")
+    Seq((900L, "leaked question about the meaning of life"))
+      .toDF("doc_id", "text").write.mode("overwrite").parquet(bench)
+    // a fresh frame with the gate's plan: its storageLevel reports
+    // whether the CacheManager still holds the gate's shingle cache
+    def shingles() = graft.ops.Decontamination
+      .benchShingles(spark.read.parquet(bench), "text", 3)
+    // the probe is not vacuous: a cached copy is visible through it
+    val probe = shingles().persist()
+    assert(shingles().storageLevel !== StorageLevel.NONE)
+    probe.unpersist(blocking = true)
+    assert(shingles().storageLevel === StorageLevel.NONE)
+
+    // the file-stream reader checks inDir when the stream is defined,
+    // after the gate has persisted and materialized its shingles
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      EventStreams.ingestDecontaminated(spark, schema, missingIn, bench,
+        tmp("decon-fail-out") + "/data", ckpt, "doc_id", "text", n = 3)
+    }
+    assert(e.getMessage.contains("absent"), e.getMessage)
+    assert(shingles().storageLevel === StorageLevel.NONE,
+      "shingle cache leaked after a failed launch")
+  }
+
   test("monitorDrift scores each batch against the reference; drifted batch spikes") {
     import spark.implicits._
     val in = tmp("drift-in")
