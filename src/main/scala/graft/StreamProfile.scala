@@ -22,6 +22,14 @@ import org.apache.spark.sql.functions._
   *     driven directly, twice, no streaming machinery: stream_b2 −
   *     batch_b2 is what the machinery adds on top of the real work
   *
+  * For `stream_b2` and `batch_b2` the line also carries
+  * `jobs_per_batch` (Spark jobs started during the case per
+  * micro-batch — the streaming counterpart of the pipeline
+  * benchmark's `pipeline.jobs_per_batch`) and `input_rows_per_row`
+  * (input rows the batches' evaluations produced per input row: the
+  * stream's summed `numInputRows`, or a counter on the directly driven
+  * batches; 1.0 when each batch is evaluated once).
+  *
   * Usage: runMain graft.StreamProfile [sfDir] — prints one JSON line.
   */
 object StreamProfile {
@@ -30,6 +38,33 @@ object StreamProfile {
     val t0 = System.nanoTime()
     f
     (System.nanoTime() - t0) / 1e9
+  }
+
+  /** `body`'s result and the Spark jobs started (on any thread) while it
+    * ran. The listener bus is asynchronous: a marker job run after
+    * `body`, delivered in order, flushes it.
+    */
+  private def jobsDuring[T](spark: SparkSession)(body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val marker = java.util.UUID.randomUUID().toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("graft.profile.marker") == marker))
+          flushed.countDown()
+        else { jobs.incrementAndGet(); () }
+    }
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      sc.setLocalProperty("graft.profile.marker", marker)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("graft.profile.marker", null)
+      flushed.await(60, java.util.concurrent.TimeUnit.SECONDS)
+      (r, jobs.get)
+    } finally sc.removeSparkListener(listener)
   }
 
   def main(args: Array[String]): Unit = {
@@ -52,15 +87,24 @@ object StreamProfile {
       (s"$base/in", s"$base/corpus", s"$base/keys", s"$base/chk")
     }
 
+    val nDocs = docs.count().toDouble
+    // case tag -> (jobs per batch, input rows per row)
+    val counts = scala.collection.mutable.LinkedHashMap.empty[String, (Double, Double)]
+
     def streamRun(tag: String, mfpt: Int): Double = {
       val (in, corpus, keys, chk) = seed(tag)
       val schema = spark.read.parquet(in).schema
-      time {
-        graft.streaming.EventStreams.ingestNearDupKeyed(spark, schema,
+      var q: org.apache.spark.sql.streaming.StreamingQuery = null
+      val (t, jobs) = jobsDuring(spark)(time {
+        q = graft.streaming.EventStreams.ingestNearDupKeyed(spark, schema,
             in, corpus, keys, chk, "doc_id", "text", threshold = 0.95,
             numHashes = 16, bands = 4, maxFilesPerTrigger = mfpt)
-          .awaitTermination()
-      }
+        q.awaitTermination()
+      })
+      val batches = q.recentProgress.filter(_.numInputRows > 0)
+      counts(tag) = (jobs.toDouble / math.max(batches.length, 1),
+        batches.map(_.numInputRows).sum / nDocs)
+      t
     }
 
     def noopRun(tag: String, mfpt: Int): Double = {
@@ -81,14 +125,23 @@ object StreamProfile {
       val (in, corpus, keys, _) = seed(tag)
       val input = spark.read.parquet(in)
       val healed = new java.util.concurrent.atomic.AtomicBoolean(false)
-      time {
-        (0 until nBatches).foreach { i =>
-          graft.streaming.EventStreams.ingestNearDupKeyedBatch(spark,
-            input.where(pmod(col("doc_id"), lit(nBatches)) === i),
+      // each batch is a frame over an RDD, as a stream's micro-batch is;
+      // the counter sees every row each evaluation of a batch produces
+      val evaluated = spark.sparkContext.longAccumulator(s"graft.profile.$tag")
+      val batches = (0 until nBatches).map { i =>
+        val b = input.where(pmod(col("doc_id"), lit(nBatches)) === i)
+        spark.createDataFrame(
+          b.rdd.map { r => evaluated.add(1); r }, b.schema)
+      }
+      val (t, jobs) = jobsDuring(spark)(time {
+        batches.foreach { b =>
+          graft.streaming.EventStreams.ingestNearDupKeyedBatch(spark, b,
             corpus, keys, "doc_id", "text", threshold = 0.95,
             numHashes = 16, bands = 4, healed)
         }
-      }
+      })
+      counts(tag) = (jobs.toDouble / nBatches, evaluated.sum / nDocs)
+      t
     }
 
     val results = Seq(
@@ -106,7 +159,13 @@ object StreamProfile {
     } catch { case scala.util.control.NonFatal(_) => }
     val js = results.map { case (k, v) => s""""$k":${Bench.fmt(v)}""" }
       .mkString("{", ",", "}")
+    def perCase(f: ((Double, Double)) => Double): String =
+      Seq("stream_b2" -> "s2", "batch_b2" -> "b2")
+        .map { case (name, tag) => s""""$name":${Bench.fmt(f(counts(tag)))}""" }
+        .mkString("{", ",", "}")
     spark.stop()
-    println(s"""{"profile":"streaming_ingest_keyed","sf":"$sfDir","cases":$js}""")
+    println(s"""{"profile":"streaming_ingest_keyed","sf":"$sfDir","cases":$js,""" +
+      s""""jobs_per_batch":${perCase(_._1)},""" +
+      s""""input_rows_per_row":${perCase(_._2)}}""")
   }
 }

@@ -58,16 +58,33 @@ object Dedup {
     * Lifecycle: SQL-cached Datasets are held strongly by the
     * CacheManager and are NOT reclaimed by the ContextCleaner, so a
     * caller that runs many probe+action cycles in one session (the
-    * streaming ingest gates) must release them — wrap the
+    * unkeyed `ingestNearDup` gate) must release them — wrap the
     * probe-and-act cycle in [[PinScope.withScope]] and every pin under
     * it unpersists when the cycle's actions complete. One-shot batch
     * queries may skip the scope (the bench/verify harnesses clear the
-    * cache between queries).
+    * cache between queries). The keyed ingest gates do not pin: they
+    * hold their batch-sized frames as [[materialize]]d plan leaves.
     */
   private[graft] def pinSmall(df: DataFrame): DataFrame = {
     val pinned = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     PinScope.track(pinned)
     pinned
+  }
+
+  /** Materialize `df` as a plan leaf: persist its RDD (MEMORY_AND_DISK,
+    * lazily — the first job that reads it fills it) and rebuild a frame
+    * over it, so later plans read the kept rows instead of re-deriving
+    * `df` inside their own (AQE-nested) subtrees. Lineage stays, so a
+    * lost executor recomputes its blocks. No CacheManager entry is made:
+    * the caller owns the returned RDD and unpersists it once the frame
+    * is no longer read ([[clusterLabels]]' rounds, the keyed ingest
+    * gate's batch-scoped leaves).
+    */
+  private[graft] def materialize(df: DataFrame)
+      : (DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]) = {
+    val r = df.rdd
+    r.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    (df.sparkSession.createDataFrame(r, df.schema), r)
   }
 
   /** Whitespace-token set of a document (order-insensitive). */
@@ -367,22 +384,7 @@ object Dedup {
   private def bandedKeys(df: DataFrame, idCol: String, textCol: String,
       numHashes: Int, bands: Int, md5Basis: Boolean,
       carry: Seq[(String, Column)] = Nil): DataFrame = {
-    // bands > numHashes would make every band key an empty slice (ALL
-    // documents collide, the bucket cap then drops everything — zero
-    // recall, silently); a non-divisible geometry would silently use
-    // only rows*bands of the requested hashes, changing the S-curve.
-    require(bands >= 1 && numHashes % bands == 0,
-      s"bands must divide numHashes: numHashes=$numHashes bands=$bands")
-    val toks = tokenSet(col(textCol))
-    val rows = numHashes / bands
-    val sig =
-      if (md5Basis) graftFn("graft_minhash_md5", toks, lit(numHashes))
-      else minhashSignature(toks, numHashes)
-    val bandCol = array((0 until bands).map { b =>
-      val sl = slice(sig, b * rows + 1, rows)
-      struct(lit(b).as("band"),
-        (if (md5Basis) sl else xxhash64(lit(b), sl)).as("key"))
-    }: _*)
+    val bandCol = bandKeyArray(col(textCol), numHashes, bands, md5Basis)
     // `carry` columns (e.g. the verification token hashes) are computed
     // in the SAME scan-side projection as the signature — one pass over
     // the text — and ride the band explode into the (band, key) shuffle.
@@ -391,6 +393,48 @@ object Dedup {
       .select(col("__id") +: col("__bk.band").as("band") +:
         col("__bk.key").as("key") +: carry.map(c => col(c._1)): _*)
   }
+
+  /** A document's MinHash band keys as one `array<struct<band INT,
+    * key>>` value — the single definition behind [[bandedKeys]] and the
+    * keyed ingest gate's per-batch features (which explode it twice:
+    * for the within-batch collapse and for the probe and key append).
+    */
+  private[graft] def bandKeyArray(text: Column, numHashes: Int, bands: Int,
+      md5Basis: Boolean): Column = {
+    // bands > numHashes would make every band key an empty slice (ALL
+    // documents collide, the bucket cap then drops everything — zero
+    // recall, silently); a non-divisible geometry would silently use
+    // only rows*bands of the requested hashes, changing the S-curve.
+    require(bands >= 1 && numHashes % bands == 0,
+      s"bands must divide numHashes: numHashes=$numHashes bands=$bands")
+    val toks = tokenSet(text)
+    val rows = numHashes / bands
+    val sig =
+      if (md5Basis) graftFn("graft_minhash_md5", toks, lit(numHashes))
+      else minhashSignature(toks, numHashes)
+    array((0 until bands).map { b =>
+      val sl = slice(sig, b * rows + 1, rows)
+      struct(lit(b).as("band"),
+        (if (md5Basis) sl else xxhash64(lit(b), sl)).as("key"))
+    }: _*)
+  }
+
+  /** Sorted token-hash array of a document — the exact-Jaccard
+    * verification operand every banded detector carries.
+    */
+  private[graft] def tokenHashes(text: Column): Column =
+    graftFn("graft_token_hashes", TextAnalysis.tokens(text))
+
+  /** `(id, band, key)` rows exploded from a band-key array column
+    * (`bandKeyArray`, or the sign-LSH twin `Similarity.lshKeyArray`),
+    * carrying `carry` columns along.
+    */
+  private[graft] def explodeKeys(df: DataFrame, idCol: String,
+      keysCol: String, idAs: String, carry: String*): DataFrame =
+    df.select(col(idCol).as(idAs) +: explode(col(keysCol)).as("__bk") +:
+        carry.map(col): _*)
+      .select(col(idAs) +: col("__bk.band").as("band") +:
+        col("__bk.key").as("key") +: carry.map(col): _*)
 
   /** MinHash-LSH near-duplicate pairs, verified with exact Jaccard on the
     * token sets so the output is deterministic given the banding config.
@@ -438,10 +482,18 @@ object Dedup {
     */
   private def scoredCandidatePairs(df: DataFrame, idCol: String,
       textCol: String, numHashes: Int, bands: Int, md5Basis: Boolean,
+      maxBucket: Int): DataFrame =
+    scoredBucketPairs(bandedKeys(spread(df), idCol, textCol, numHashes,
+      bands, md5Basis, carry = Seq("__toks" -> tokenHashes(col(textCol)))),
+      maxBucket)
+
+  /** The bucket/pair half of [[scoredCandidatePairs]] over precomputed
+    * `(__id, band, key, __toks)` member rows — the keyed ingest gate
+    * feeds it the rows exploded from its once-computed batch features
+    * instead of hashing the batch again.
+    */
+  private[graft] def scoredBucketPairs(keyed: DataFrame,
       maxBucket: Int): DataFrame = {
-    val keyed = bandedKeys(spread(df), idCol, textCol, numHashes, bands,
-      md5Basis, carry = Seq("__toks" ->
-        graftFn("graft_token_hashes", TextAnalysis.tokens(col(textCol)))))
     // One shuffle: gather each bucket's members, emit its pairs inline.
     // Over-cap buckets are dropped and counted under the
     // "lsh_candidates" CapMetrics tag — never silent. The size >= 2
@@ -563,63 +615,66 @@ object Dedup {
       corpus: DataFrame, idCol: String, textCol: String, threshold: Double,
       numHashes: Int = 16, bands: Int = 8, maxBucket: Int = 10000,
       md5Basis: Boolean = false): DataFrame = {
-    val batchKeys = bandedKeys(spread(batch), idCol, textCol, numHashes,
-        bands, md5Basis)
-      .select(col("__id").as("idA"), col("band"), col("key"))
-    val cands = probeCandidates(batchKeys, corpusKeys, idCol, maxBucket)
-    verifyJaccardCandidates(batch, cands, corpus, idCol, textCol, threshold)
+    // batchKeys is referenced by the probe's broadcast key set AND its
+    // join back; pinned, the signature kernel runs once
+    val batchKeys = pinSmall(bandedKeys(spread(batch), idCol, textCol,
+        numHashes, bands, md5Basis)
+      .select(col("__id").as("idA"), col("band"), col("key")))
+    val cands = probeCandidates(batchKeys, corpusKeys, idCol, maxBucket,
+      "incremental_neardup_corpus", pinSmall)
+    verifyJaccardCandidates(
+      batch.select(col(idCol).as("idA"), tokenHashes(col(textCol)).as("__ta")),
+      cands, corpus, idCol, textCol, threshold)
   }
 
-  /** Candidate generation of the keyed probe: semi-join the stored key
-    * table down to the batch's (band, key) set, re-cap the probed
-    * sliver, join back to batch keys.
+  /** Candidate generation of the keyed probes (text and embedding):
+    * semi-join the stored key table down to the batch's `(band, key)`
+    * set, re-cap the probed sliver under `capTag`, join back to the
+    * batch keys `(idA, band, key)`.
+    *
+    * `hold` keeps the two frames the downstream plan references twice —
+    * the probed sliver (count agg + anti-join inside cappedByCount;
+    * unheld, each leg re-scans the key table) and the capped candidate
+    * pairs (verify's corpus semi-join + pair join). Both are
+    * batch-proportional, never corpus-proportional. The one-shot probes
+    * pass [[pinSmall]]; the keyed ingest gate passes its batch-scoped
+    * plan-leaf materializer.
     */
-  private def probeCandidates(batchKeys0: DataFrame, corpusKeys: DataFrame,
-      idCol: String, maxBucket: Int): DataFrame = {
-    // Every frame pinned here is batch-proportional (batch keys, the
-    // probed corpus sliver, capped candidate pairs) — never corpus-
-    // proportional — so the pins are scale-safe at any corpus size.
-    // batchKeys: referenced by the broadcast key set AND the join back;
-    // probed: referenced twice inside cappedByCount (count agg + anti-
-    // join) — unpinned, each leg re-ran the corpus-key kernel;
-    // cands: referenced twice by verify (corpus semi-join + pair join).
-    val batchKeys = pinSmall(batchKeys0)
-    val probed = pinSmall(corpusKeys.join(
+  private[graft] def probeCandidates(batchKeys: DataFrame,
+      corpusKeys: DataFrame, idCol: String, maxBucket: Int, capTag: String,
+      hold: DataFrame => DataFrame): DataFrame = {
+    val probed = hold(corpusKeys.join(
       broadcast(batchKeys.select(col("band"), col("key")).distinct()),
       Seq("band", "key"), "left_semi"))
-    val cappedKeys = CapMetrics.cappedByCount(probed,
-      "incremental_neardup_corpus", Seq("band", "key"), maxBucket)
-    pinSmall(batchKeys
+    val cappedKeys = CapMetrics.cappedByCount(probed, capTag,
+      Seq("band", "key"), maxBucket)
+    hold(batchKeys
       .join(cappedKeys.select(col(idCol).as("idB"), col("band"), col("key")),
         Seq("band", "key"))
       .select(col("idA"), col("idB"))
       .distinct())
   }
 
-  /** Verification stage of the keyed probe: the corpus side is
-    * semi-joined down to the DISTINCT candidate docs BEFORE the
-    * tokenize+hash kernel runs, so the kernel evaluates min(candidate
-    * docs, corpus) times — never corpus-proportional (an unrestricted
-    * corpus projection pays the kernel for every corpus document per
-    * probe: measured as the dominant term of the keyed probe's growth)
-    * and never pair-proportional (a clique idB would re-tokenize per
-    * matching idA). cands is referenced twice; it ends in a distinct
-    * aggregate AND probeCandidates pins it, so the candidate subplan
-    * evaluates once.
+  /** Verification stage of the keyed probe over the batch's `(idA,
+    * __ta)` token hashes: the corpus side is semi-joined down to the
+    * DISTINCT candidate docs BEFORE the tokenize+hash kernel runs, so
+    * the kernel evaluates min(candidate docs, corpus) times — never
+    * corpus-proportional (an unrestricted corpus projection pays the
+    * kernel for every corpus document per probe: measured as the
+    * dominant term of the keyed probe's growth) and never
+    * pair-proportional (a clique idB would re-tokenize per matching
+    * idA). cands is referenced twice; [[probeCandidates]] holds it, so
+    * the candidate subplan evaluates once.
     */
-  private def verifyJaccardCandidates(batch: DataFrame, cands: DataFrame,
-      corpus: DataFrame, idCol: String, textCol: String,
+  private[graft] def verifyJaccardCandidates(batchToks: DataFrame,
+      cands: DataFrame, corpus: DataFrame, idCol: String, textCol: String,
       threshold: Double): DataFrame = {
     val corpusHashed = corpus
       .join(cands.select(col("idB").as(idCol)).distinct(), Seq(idCol),
         "left_semi")
-      .select(col(idCol).as("idB"),
-        graftFn("graft_token_hashes", TextAnalysis.tokens(col(textCol)))
-          .as("__tb"))
+      .select(col(idCol).as("idB"), tokenHashes(col(textCol)).as("__tb"))
     cands
-      .join(batch.select(col(idCol).as("idA"),
-        graftFn("graft_token_hashes", TextAnalysis.tokens(col(textCol)))
-          .as("__ta")), Seq("idA"))
+      .join(batchToks, Seq("idA"))
       .join(corpusHashed, Seq("idB"))
       .select(col("idA"), col("idB"),
         graftFn("graft_jaccard_sorted", col("__ta"), col("__tb"))
@@ -696,17 +751,15 @@ object Dedup {
   def clusterLabels(pairs: DataFrame, maxIter: Int = 60,
       driverMaxEdges: Long = 1000000L): DataFrame = {
     val spark = pairs.sparkSession
-    val level = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     var lastRdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = null
-    def materialize(df: DataFrame): DataFrame = {
-      val r = df.rdd
-      r.persist(level)
+    def hold(df: DataFrame): DataFrame = {
+      val (leaf, r) = materialize(df)
       lastRdd = r
-      spark.createDataFrame(r, df.schema)
+      leaf
     }
 
     // undirected edge set, one row per edge, no self-loops
-    var star = materialize(
+    var star = hold(
       pairs.select(col("idA").as("a"), col("idB").as("b"))
         .where(col("a") =!= col("b")).distinct())
     val initialRdd = lastRdd
@@ -799,7 +852,7 @@ object Dedup {
         .where(col("a") =!= col("b"))
         .distinct()
       val prevRdd = lastRdd
-      star = materialize(small)
+      star = hold(small)
       val sig = signature(star)
       // keep the initial edges cached: `nodes` reads them in the final join
       if (prevRdd ne initialRdd) prevRdd.unpersist(blocking = false)
@@ -812,7 +865,7 @@ object Dedup {
     // fixpoint edges form stars (v → component minimum); min-collapse is
     // a no-op there but keeps labels well-defined if maxIter cut early
     val finalStarRdd = lastRdd
-    val labels = materialize(
+    val labels = hold(
       nodes.join(star.groupBy(col("a").as("id")).agg(min(col("b")).as("label")),
           Seq("id"), "left")
         .select(col("id"), coalesce(col("label"), col("id")).as("label")))
@@ -886,6 +939,25 @@ object Dedup {
     val repr = exactDedup(df, idCol, textCol)
     val pairs = minhashNearDups(repr, idCol, textCol, threshold, numHashes,
       bands, md5Basis)
+    collapseNearDups(repr, idCol, pairs)
+  }
+
+  /** [[nearDupPipeline]] (xxh64 basis) over precomputed per-document
+    * features: `features` carries each row's band-key array `__bk`
+    * ([[bandKeyArray]] at the caller's geometry) and token hashes
+    * `__toks` ([[tokenHashes]]), so a caller that also probes and
+    * stores those keys hashes its rows once. Survivor rules are
+    * nearDupPipeline's: [[exactDedup]] first, [[minhashNearDups]]'
+    * default bucket cap, then [[collapseNearDups]]. Keeps every column
+    * of `features`.
+    */
+  private[graft] def nearDupCollapse(features: DataFrame, idCol: String,
+      textCol: String, threshold: Double): DataFrame = {
+    val repr = exactDedup(features, idCol, textCol)
+    val keyed = explodeKeys(repr, idCol, "__bk", "__id", "__toks")
+    val pairs = scoredBucketPairs(keyed, maxBucket = 1000)
+      .where(col("jaccard") >= threshold)
+      .distinct()
     collapseNearDups(repr, idCol, pairs)
   }
 
@@ -1464,6 +1536,14 @@ object Dedup {
   * returns. Scopes are thread-local (a structured-streaming batch body
   * runs on one thread) and nest; pins created with no active scope keep
   * the old behavior (released by the harness cache clear / session end).
+  *
+  * The action that consumes the pinned frames MUST run inside the scope
+  * and on the thread that opened it: a frame returned out of the scope
+  * (or handed to another thread) reads pins that are already released,
+  * and its plan silently recomputes the pinned subtrees. Today the
+  * unkeyed `ingestNearDup` gate is the one streaming caller; the keyed
+  * gates no longer pin (their batch-sized frames are plan leaves they
+  * release themselves, see [[Dedup.materialize]]).
   */
 private[graft] object PinScope {
   private val active =

@@ -168,6 +168,17 @@ object Similarity {
     val keyed = src.select(col(idCol).as("__id"),
       posexplode(graftFn("graft_lsh_bands", col(vecCol),
         lit(planesPerBand), lit(bands))).as(Seq("band", "key")))
+    bucketedCosinePairs(keyed, src, idCol, vecCol, threshold, maxBucket)
+  }
+
+  /** The bucket/pair/verify half of [[cosineNearDupPairsBucketed]] over
+    * precomputed `(__id, band, key)` member rows of `src` (which carries
+    * `idCol` and `vecCol`) — the keyed ingest gate feeds it rows
+    * exploded from its once-computed batch features.
+    */
+  private[graft] def bucketedCosinePairs(keyed: DataFrame, src: DataFrame,
+      idCol: String, vecCol: String, threshold: Double,
+      maxBucket: Int): DataFrame = {
     // Candidate pairs stream out of a codegen'd self-join on the bucket
     // key (one shuffle of skinny (band, key, id) rows; the count-agg cap
     // rides the same exchange — see CapMetrics.cappedByCount for why a
@@ -309,12 +320,29 @@ object Similarity {
   /** The uncapped `(idCol, band, key)` sign-LSH projection every keyed
     * path derives from — ONE definition so the capped build, the inline
     * probe, and the batch side can never desynchronize on key shape.
+    * [[lshKeyArray]] is its per-row form: keep the two in step.
     */
   private def lshKeys(df: DataFrame, idCol: String, vecCol: String,
       planesPerBand: Int, bands: Int): DataFrame =
     df.select(col(idCol),
       posexplode(graftFn("graft_lsh_bands", col(vecCol),
         lit(planesPerBand), lit(bands))).as(Seq("band", "key")))
+
+  /** [[lshKeys]]' rows as one per-row `array<struct<band INT, key
+    * LONG>>` value — the feature the keyed ingest gate computes once
+    * per batch (the shape of [[Dedup.bandKeyArray]]). Band `b` holds
+    * element `b` of the one `graft_lsh_bands` array, which a projection
+    * evaluates once per row; a null vector has no keys, as in lshKeys.
+    * lshKeys itself keeps its posexplode: exploding this array inline
+    * puts the whole array expression, one kernel call per band, into
+    * the non-empty filter the optimizer infers below the explode.
+    */
+  private[graft] def lshKeyArray(vec: Column, planesPerBand: Int,
+      bands: Int): Column = {
+    val keys = graftFn("graft_lsh_bands", vec, lit(planesPerBand), lit(bands))
+    when(keys.isNotNull, array((0 until bands).map(b =>
+      struct(lit(b).as("band"), keys.getItem(b).as("key"))): _*))
+  }
 
   /** The corpus's capped `(idCol, band, key)` sign-LSH key table — the
     * embedding twin of [[Dedup.corpusBandKeys]]: build once, store,
@@ -342,46 +370,33 @@ object Similarity {
       corpusKeys: DataFrame, corpus: DataFrame, idCol: String,
       vecCol: String, threshold: Double, planesPerBand: Int = 8,
       bands: Int = 4, maxBucket: Int = 10000): DataFrame = {
-    val batchKeys = lshKeys(Dedup.spread(batch), idCol, vecCol,
-        planesPerBand, bands)
-      .withColumnRenamed(idCol, "idA")
-    val cands = probeCosineCandidates(batchKeys, corpusKeys, idCol,
-      maxBucket)
-    verifyCosineCandidates(batch, cands, corpus, idCol, vecCol, threshold)
+    // the same pins as the text probe (see pinSmall's scaladoc): every
+    // pinned frame is batch-proportional and referenced twice downstream
+    // — unpinned, Catalyst re-inlined the LSH kernel subtree per
+    // reference (plans/r14/q74_*_before.txt: 12 scans / 20 exchanges)
+    val batchKeys = Dedup.pinSmall(lshKeys(Dedup.spread(batch), idCol,
+        vecCol, planesPerBand, bands)
+      .withColumnRenamed(idCol, "idA"))
+    val cands = Dedup.probeCandidates(batchKeys, corpusKeys, idCol,
+      maxBucket, "incremental_cosine_corpus", Dedup.pinSmall)
+    verifyCosineCandidates(batchVectors(batch, idCol, vecCol), cands, corpus,
+      idCol, vecCol, threshold)
   }
 
-  /** Candidate generation of the keyed cosine probe — the stored table
-    * is restricted to the batch's probed key set BEFORE the re-cap
-    * window (see [[Dedup.incrementalNearDupsWithKeys]]): the window
-    * then runs over a batch-sized sliver, never the corpus-sized table.
-    */
-  private def probeCosineCandidates(batchKeys0: DataFrame,
-      corpusKeys: DataFrame, idCol: String, maxBucket: Int): DataFrame = {
-    // Same lazy pins as Dedup.probeCandidates (see pinSmall's scaladoc):
-    // every frame is batch-proportional, and each was referenced twice
-    // downstream — unpinned, Catalyst re-inlined the LSH kernel subtree
-    // per reference (plans/r14/q74_*_before.txt: 12 scans / 20 exchanges).
-    val batchKeys = Dedup.pinSmall(batchKeys0)
-    val probed = Dedup.pinSmall(corpusKeys.join(
-      broadcast(batchKeys.select(col("band"), col("key")).distinct()),
-      Seq("band", "key"), "left_semi"))
-    val cappedKeys = CapMetrics.cappedByCount(probed,
-      "incremental_cosine_corpus", Seq("band", "key"), maxBucket)
-    Dedup.pinSmall(batchKeys
-      .join(cappedKeys.select(col(idCol).as("idB"), col("band"), col("key")),
-        Seq("band", "key"))
-      .select(col("idA"), col("idB"))
-      .distinct())
-  }
+  /** The batch side of [[verifyCosineCandidates]]: `(idA, __va, __na)`. */
+  private[graft] def batchVectors(batch: DataFrame, idCol: String,
+      vecCol: String): DataFrame =
+    batch.select(col(idCol).as("idA"), col(vecCol).as("__va"),
+      l2Norm(col(vecCol)).as("__na"))
 
-  /** Verification stage of the keyed cosine probe: the corpus side is
-    * semi-joined down to the distinct candidate vectors before the norm
-    * kernel runs — kernel work is min(candidate docs, corpus), never
-    * corpus- or pair-proportional (see
-    * [[Dedup.incrementalNearDupsWithKeys]]).
+  /** Verification stage of the keyed cosine probe over the batch's
+    * [[batchVectors]]: the corpus side is semi-joined down to the
+    * distinct candidate vectors before the norm kernel runs — kernel
+    * work is min(candidate docs, corpus), never corpus- or
+    * pair-proportional (see [[Dedup.incrementalNearDupsWithKeys]]).
     */
-  private def verifyCosineCandidates(batch: DataFrame, cands: DataFrame,
-      corpus: DataFrame, idCol: String, vecCol: String,
+  private[graft] def verifyCosineCandidates(batchVecs: DataFrame,
+      cands: DataFrame, corpus: DataFrame, idCol: String, vecCol: String,
       threshold: Double): DataFrame = {
     val corpusVecs = corpus
       .join(cands.select(col("idB").as(idCol)).distinct(), Seq(idCol),
@@ -389,8 +404,7 @@ object Similarity {
       .select(col(idCol).as("idB"), col(vecCol).as("__vb"),
         l2Norm(col(vecCol)).as("__nb"))
     cands
-      .join(batch.select(col(idCol).as("idA"), col(vecCol).as("__va"),
-        l2Norm(col(vecCol)).as("__na")), Seq("idA"))
+      .join(batchVecs, Seq("idA"))
       .join(corpusVecs, Seq("idB"))
       .select(col("idA"), col("idB"),
         (dotProduct(col("__va"), col("__vb")) / (col("__na") * col("__nb")))

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, StreamingQueryListener, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -394,7 +394,7 @@ object EventStreams {
         trigger) { (batch, _) =>
       val fresh =
         if (pathExists(spark, corpusDir)) {
-          val corpus = spark.read.parquet(corpusDir)
+          val corpus = spark.read.schema(schema).parquet(corpusDir)
           dropNullTextIfCorpusHasOne(
             Dedup.incrementalDedup(batch, corpus, idCol, textCol),
             corpus, textCol)
@@ -435,7 +435,7 @@ object EventStreams {
       val bf = bloom.getOrElse {
         val seeded =
           if (corpusExists)
-            spark.read.parquet(corpusDir)
+            spark.read.schema(schema).parquet(corpusDir)
               .select(md5(col(textCol)).as("__fp"))
               .stat.bloomFilter("__fp", expectedCorpusItems, fpp)
           else org.apache.spark.util.sketch.BloomFilter
@@ -445,7 +445,7 @@ object EventStreams {
       }
       val fresh =
         (if (corpusExists) {
-          val corpus = spark.read.parquet(corpusDir)
+          val corpus = spark.read.schema(schema).parquet(corpusDir)
           dropNullTextIfCorpusHasOne(
             Dedup.incrementalDedupBloom(batch, corpus, idCol, textCol,
               expectedCorpusItems, fpp, bloom = Some(bf)),
@@ -492,7 +492,7 @@ object EventStreams {
           numHashes, bands)
         val fresh =
           if (pathExists(spark, corpusDir)) {
-            val corpus = spark.read.parquet(corpusDir)
+            val corpus = spark.read.schema(schema).parquet(corpusDir)
             // exact replay guard FIRST: near-LINKING self-filters a
             // replay only when its content can collide and verify — an
             // empty token set has NaN Jaccard and never links, so such
@@ -535,10 +535,11 @@ object EventStreams {
   /** [[ingestNearDup]] with a PERSISTENT corpus band-key table
     * (`keysDir`) maintained alongside the corpus — the steady-state
     * form: each batch probes the stored keys
-    * ([[graft.ops.Dedup.incrementalNearDupsWithKeys]]) instead of
-    * re-hashing the whole corpus, and appends its survivors' keys
-    * ([[graft.ops.Dedup.corpusBandKeys]] over the batch-sized
-    * survivors) after the corpus append. Per-batch corpus-side work is
+    * (the probe of [[graft.ops.Dedup.incrementalNearDupsWithKeys]])
+    * instead of re-hashing the whole corpus, and appends its survivors'
+    * keys (the band keys computed once per batch, capped as
+    * [[graft.ops.Dedup.corpusBandKeys]] caps them) after the corpus
+    * append. Per-batch corpus-side work is
     * one key-table scan plus the candidate sliver's text reads —
     * independent of corpus size once the table is laid out
     * (bucket it by (band, key); see `Layouts.writeBucketed`).
@@ -592,26 +593,59 @@ object EventStreams {
     import graft.ops.Dedup
     keyedIngestBatch(spark, batch, corpusDir, keysDir, idCol, textCol,
       healed, maxStoreFiles)(
-      collapse = b => Dedup.nearDupPipeline(b, idCol, textCol, threshold,
-        numHashes, bands),
-      bandKeys = df => Dedup.corpusBandKeys(df, idCol, textCol, numHashes,
-        bands),
-      linkedIds = (novel, keys, corpus) =>
-        Dedup.incrementalNearDupsWithKeys(novel, keys, corpus, idCol,
-          textCol, threshold, numHashes, bands))
+      keyArray = Dedup.bandKeyArray(col(textCol), numHashes, bands,
+        md5Basis = false),
+      carry = Seq(Dedup.tokenHashes(col(textCol)).as("__toks")),
+      capTag = "incremental_neardup_corpus",
+      collapse = f => Dedup.nearDupCollapse(f, idCol, textCol, threshold),
+      verify = (cands, novel, corpus) => Dedup.verifyJaccardCandidates(
+        novel.select(col(idCol).as("idA"), col("__toks").as("__ta")),
+        cands, corpus, idCol, textCol, threshold),
+      healKeys = df => Dedup.corpusBandKeys(df, idCol, textCol, numHashes,
+        bands))
   }
+
+  /** Bucket cap of the keyed gates' probe re-cap and of their key
+    * appends: the default of the keyed probes and of the key-table
+    * builds ([[graft.ops.Dedup.corpusBandKeys]],
+    * [[graft.ops.Similarity.corpusLshKeys]]), which the heal uses.
+    */
+  private val KeyBucketCap = 10000
 
   /** Shared micro-batch skeleton of the keyed ingest gates — the text
     * ([[ingestNearDupKeyedBatch]]) and embedding
     * ([[ingestEmbeddingNearDupKeyedBatch]]) flavors differ only in
-    * their collapse / key-derivation / near-link functions; the heal
-    * and replay discipline must stay byte-identical or the gates
-    * drift apart.
+    * their per-row features, collapse, verification and heal-key
+    * functions; the heal and replay discipline must stay byte-identical
+    * or the gates drift apart.
     *
-    * Flow: within-batch `collapse` → once-per-run heal of unkeyed
-    * corpus rows → EXACT replay guard → `linkedIds` near-link probe of
-    * the stored key table → append survivors to the corpus, then their
+    * Flow: featurize → within-batch `collapse` → once-per-run heal of
+    * unkeyed corpus rows → EXACT replay guard → near-link probe of the
+    * stored key table → append survivors to the corpus, then their
     * keys.
+    *
+    * Each micro-batch is scanned and featurized ONCE: one projection
+    * computes the batch columns plus the exact fingerprint `__xfp`
+    * (`xxhash64(content)`), the flavor's band-key array `__bk`
+    * (`keyArray`: `array<struct<band INT, key LONG>>`) and its `carry`
+    * verification columns. The collapse, the replay guard, the probe's
+    * batch keys and the key append all read those columns. Every
+    * batch-sized intermediate that later steps read more than once —
+    * the features, the collapsed `local`, `novel`, the probed key
+    * sliver, the candidate pairs and `fresh` — is a plan leaf
+    * ([[graft.ops.Dedup.materialize]]: a persisted RDD under a fresh
+    * frame), unpersisted in the `finally` that ends the batch, whether
+    * it succeeds or throws. Later plans read the leaves instead of
+    * re-deriving their inputs inside nested lazily cached AQE plans:
+    * on the curation benchmark's 200-doc ingest batch (4 cores) the
+    * gate went from 59 Spark jobs and six evaluations of the source
+    * files to 34 jobs and one evaluation (`stream.rows_in` equals the
+    * rows offered), and its per-batch time from ~8 s to ~5 s. Tried
+    * first on the old flow and not enough: an eager persist+count of
+    * `local` and `novel` (55 jobs, same time), eager checkpoints (the
+    * lazy probe pins still ran 22 jobs inside one write), and AQE off
+    * for the batch (−20%, but a session-wide knob). The gate makes no
+    * CacheManager entry.
     *
     * The EXACT replay guard closes the degenerate-content hole in the
     * "replays self-filter" contract: near-LINKING self-filters a
@@ -624,89 +658,109 @@ object EventStreams {
     * folds to the hash seed, so all contentless rows share one
     * fingerprint, matching [[graft.ops.Dedup.exactDedup]]'s null
     * grouping), and each batch drops rows whose exact fingerprint is
-    * already stored in band -1 BEFORE the near-link probe. Real bands
-    * are 0-based and every key join includes the band column, so
-    * band -1 rows are invisible to the near-link probes; the heal
-    * re-keys BOTH kinds for unkeyed corpus rows, which is what makes a
-    * replay after a keys-append crash still self-filter. Key tables
-    * written before this guard existed simply have no band -1 rows:
-    * probes of them degrade to the old near-link-only behavior.
+    * already stored in band -1 BEFORE the near-link probe; the stored
+    * band -1 rows stream past a broadcast of the batch fingerprints.
+    * Real bands are 0-based and every key join includes the band
+    * column, so band -1 rows are invisible to the near-link probes; the
+    * heal re-keys BOTH kinds for unkeyed corpus rows, which is what
+    * makes a replay after a keys-append crash still self-filter. Key
+    * tables written before this guard existed simply have no band -1
+    * rows: probes of them degrade to the old near-link-only behavior.
+    *
+    * Both stores are read with known schemas — the corpus as `(id,
+    * content)`, the keys as `(id, band INT, key LONG)` — so no read
+    * pays a Parquet schema-inference job.
     */
   private def keyedIngestBatch(spark: SparkSession, batch: DataFrame,
       corpusDir: String, keysDir: String, idCol: String,
       contentCol: String, healed: java.util.concurrent.atomic.AtomicBoolean,
       maxStoreFiles: Int)(
+      keyArray: Column,
+      carry: Seq[Column],
+      capTag: String,
       collapse: DataFrame => DataFrame,
-      bandKeys: DataFrame => DataFrame,
-      linkedIds: (DataFrame, DataFrame, DataFrame) => DataFrame): Unit = {
+      verify: (DataFrame, DataFrame, DataFrame) => DataFrame,
+      healKeys: DataFrame => DataFrame): Unit = {
+    import graft.ops.{CapMetrics, Dedup}
+    import org.apache.spark.sql.types.{IntegerType, LongType, StructField}
     // roll a crashed generational fold forward BEFORE either store is
     // read (read-consistent only recovery-before-read; see
     // compactGenerational). Metadata-only on the healthy path.
     graft.io.Layouts.recoverGenerational(spark, corpusDir)
     graft.io.Layouts.recoverGenerational(spark, keysDir)
     val corpusExists = pathExists(spark, corpusDir)
-    def withExactKeys(df: DataFrame): DataFrame =
-      bandKeys(df).unionByName(df.select(col(idCol),
-        lit(-1).as("band"), xxhash64(col(contentCol)).as("key")))
-    // probe pins (Dedup.pinSmall under the keyed probes built by
-    // `linkedIds`) release when this batch's appends complete —
-    // unscoped they accumulated ~3 CacheManager entries per micro-batch
-    // for the stream's lifetime (r14 advisor finding)
-    graft.ops.PinScope.withScope {
-    // `local` feeds the probe's batch-key derivation, the candidate
-    // joins AND the final anti-join; an explicit persist was A/B'd
-    // (StreamProfile, round 9) and did NOT move the per-batch time —
-    // Spark's exchange/stage reuse already covers the shared prefix,
-    // so the plan stays unpinned.
-    val local = collapse(batch)
-    val fresh =
-      if (corpusExists) {
-        val corpus = spark.read.parquet(corpusDir)
-        // heal (once per run): re-key corpus docs a previous run
-        // appended without keys — within this run appends are
-        // strictly ordered, so later batches cannot be unkeyed.
-        // The healthy-path audit is ids-only: the anti-join reads
-        // just the two id columns (parquet-pruned — never the fat
-        // content column) and joins against the RAW key rows
-        // (left_anti ignores build-side duplicates, so a corpus-sized
-        // distinct() shuffle would buy nothing); content is scanned
-        // only for the usually-empty unkeyed sliver, via a semi-join
-        // back
-        if (healed.compareAndSet(false, true)) {
-          val keysExist = pathExists(spark, keysDir)
-          val unkeyedIds =
-            if (keysExist)
-              corpus.select(col(idCol)).join(
-                spark.read.parquet(keysDir).select(col(idCol)),
-                Seq(idCol), "left_anti")
-            else corpus.select(col(idCol))
-          // `|| !keysExist`: a crash after an EMPTY batch's corpus
-          // append leaves corpusDir present (schema-only) with no
-          // keysDir and zero unkeyed ids — the heal must still
-          // create the (empty) key table or the read below wedges
-          // every restart on PATH_NOT_FOUND.
-          if (!unkeyedIds.isEmpty || !keysExist) {
-            val unkeyed = corpus.select(col(idCol), col(contentCol))
-              .join(unkeyedIds, Seq(idCol), "left_semi")
-            withExactKeys(unkeyed).write.mode("append").parquet(keysDir)
-          }
-        }
-        val keys = spark.read.parquet(keysDir)
-        // exact replay guard (scaladoc above): byte-identical content
-        // already in the corpus drops here, degenerate or not, before
-        // any near-link work
-        val replayedIds = local
-          .select(col(idCol), xxhash64(col(contentCol)).as("key"))
-          .join(keys.where(col("band") === -1).select(col("key")),
-            Seq("key"), "left_semi")
-          .select(col(idCol))
-        val novel = local.join(replayedIds, Seq(idCol), "left_anti")
-        val linked = linkedIds(novel, keys, corpus)
-          .select(col("idA").as(idCol)).distinct()
-        novel.join(linked, Seq(idCol), "left_anti")
-      } else local
-    val freshP = fresh.persist()
+    val batchCols = batch.columns.toSeq.map(col)
+    val corpusSchema = StructType(Seq(batch.schema(idCol),
+      batch.schema(contentCol)))
+    val keysSchema = StructType(Seq(batch.schema(idCol),
+      StructField("band", IntegerType), StructField("key", LongType)))
+    def bandKeys(df: DataFrame): DataFrame =
+      Dedup.explodeKeys(df, idCol, "__bk", idCol)
+    def exactKeys(df: DataFrame, fp: Column): DataFrame =
+      df.select(col(idCol), lit(-1).as("band"), fp.as("key"))
+    val held = scala.collection.mutable.ArrayBuffer
+      .empty[org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]]
+    def leaf(df: DataFrame): DataFrame = {
+      val (frame, rdd) = Dedup.materialize(df)
+      held += rdd
+      frame
+    }
     try {
+      val features = leaf(Dedup.spread(batch).select(batchCols ++ Seq(
+        xxhash64(col(contentCol)).as("__xfp"), keyArray.as("__bk")) ++
+        carry: _*))
+      val local = leaf(collapse(features))
+      val fresh =
+        if (corpusExists) {
+          val corpus = spark.read.schema(corpusSchema).parquet(corpusDir)
+          // heal (once per run): re-key corpus docs a previous run
+          // appended without keys — within this run appends are
+          // strictly ordered, so later batches cannot be unkeyed.
+          // The healthy-path audit is ids-only: the anti-join reads
+          // just the two id columns (parquet-pruned — never the fat
+          // content column) and joins against the RAW key rows
+          // (left_anti ignores build-side duplicates, so a corpus-sized
+          // distinct() shuffle would buy nothing); content is scanned
+          // only for the usually-empty unkeyed sliver, via a semi-join
+          // back
+          if (healed.compareAndSet(false, true)) {
+            val keysExist = pathExists(spark, keysDir)
+            val unkeyedIds =
+              if (keysExist)
+                corpus.select(col(idCol)).join(
+                  spark.read.schema(keysSchema).parquet(keysDir)
+                    .select(col(idCol)),
+                  Seq(idCol), "left_anti")
+              else corpus.select(col(idCol))
+            // `|| !keysExist`: a crash after an EMPTY batch's corpus
+            // append leaves corpusDir present (schema-only) with no
+            // keysDir and zero unkeyed ids — the heal must still
+            // create the (empty) key table or the read below wedges
+            // every restart on PATH_NOT_FOUND.
+            if (!unkeyedIds.isEmpty || !keysExist) {
+              val unkeyed = corpus.join(unkeyedIds, Seq(idCol), "left_semi")
+              healKeys(unkeyed)
+                .unionByName(exactKeys(unkeyed, xxhash64(col(contentCol))))
+                .write.mode("append").parquet(keysDir)
+            }
+          }
+          val keys = spark.read.schema(keysSchema).parquet(keysDir)
+          // exact replay guard (scaladoc above): byte-identical content
+          // already in the corpus drops here, degenerate or not, before
+          // any near-link work
+          val replayedIds = keys.where(col("band") === -1)
+            .select(col("key"))
+            .join(broadcast(local.select(col(idCol), col("__xfp").as("key"))),
+              Seq("key"))
+            .select(col(idCol))
+          val novel = leaf(local.join(replayedIds, Seq(idCol), "left_anti"))
+          val cands = Dedup.probeCandidates(
+            Dedup.explodeKeys(novel, idCol, "__bk", "idA"), keys, idCol,
+            KeyBucketCap, capTag, leaf)
+          val linked = verify(cands, novel, corpus)
+            .select(col("idA").as(idCol)).distinct()
+          leaf(novel.join(linked, Seq(idCol), "left_anti"))
+        } else local
       // ONE file per append (round 11): survivors are micro-batch-sized,
       // and the default task-count append grew both stores by ~32 tiny
       // files per batch — after 50 batches every later batch re-listed
@@ -715,10 +769,15 @@ object EventStreams {
       // sustained profile (r11_streaming_profile.json) while per-batch
       // match work stayed constant. One file per batch makes the slope
       // shallow; the generational fold below bounds what remains.
-      freshP.coalesce(1).write.mode("append").parquet(corpusDir)
-      withExactKeys(freshP).coalesce(1).write.mode("append").parquet(keysDir)
-    } finally freshP.unpersist(blocking = false)
-    } // PinScope.withScope
+      fresh.select(batchCols: _*).coalesce(1)
+        .write.mode("append").parquet(corpusDir)
+      // the survivors' keys are their feature keys, capped exactly as
+      // the key-table builds cap them — no second hashing pass
+      CapMetrics.cappedByCount(bandKeys(fresh), capTag, Seq("band", "key"),
+          KeyBucketCap)
+        .unionByName(exactKeys(fresh, col("__xfp")))
+        .coalesce(1).write.mode("append").parquet(keysDir)
+    } finally held.foreach(_.unpersist(blocking = false))
     // compaction lifecycle (round 13, generational): one file per
     // append keeps per-batch file growth minimal, but over a long run
     // BOTH stores still gain a file per batch and every later batch
@@ -759,8 +818,9 @@ object EventStreams {
     * ([[graft.ops.Similarity.incrementalCosineNearDupsWithKeys]] — only
     * the batch side hashes or shuffles; the corpus contributes the key
     * table as a build side plus one narrow candidate-sliver vector
-    * read). Survivors append together with their keys
-    * ([[graft.ops.Similarity.corpusLshKeys]]).
+    * read). Survivors append together with their keys (computed once
+    * per batch, capped as [[graft.ops.Similarity.corpusLshKeys]] caps
+    * them).
     *
     * Crash consistency is the text gate's, verbatim (the two flavors
     * share [[keyedIngestBatch]]): keys append strictly AFTER the corpus
@@ -799,27 +859,30 @@ object EventStreams {
     import graft.ops.{Dedup, Similarity}
     keyedIngestBatch(spark, batch, corpusDir, keysDir, idCol, vecCol,
       healed, maxStoreFiles)(
-      collapse = { b =>
+      keyArray = Similarity.lshKeyArray(col(vecCol), planesPerBand, bands),
+      carry = Nil,
+      capTag = "incremental_cosine_corpus",
+      collapse = { f =>
         // exact within-batch collapse FIRST (the text flavor gets this
-        // from nearDupPipeline's exactDedup): byte-identical vectors —
-        // including a replayed file inside one trigger duplicating a
-        // row under the SAME id, which the pair expansion can never
-        // link because self-pairs are excluded — keep one survivor,
-        // lowest id wins
+        // from exactDedup): byte-identical vectors — including a
+        // replayed file inside one trigger duplicating a row under the
+        // SAME id, which the pair expansion can never link because
+        // self-pairs are excluded — keep one survivor, lowest id wins
         val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(xxhash64(col(vecCol))).orderBy(col(idCol))
-        val exact = b.withColumn("__rn", row_number().over(w))
+          .partitionBy(col("__xfp")).orderBy(col(idCol))
+        val exact = f.withColumn("__rn", row_number().over(w))
           .where(col("__rn") === 1).drop("__rn")
-        val pairs = Similarity.cosineNearDupPairsBucketed(exact, idCol,
-            vecCol, threshold, planesPerBand, bands)
+        val pairs = Similarity.bucketedCosinePairs(
+            Dedup.explodeKeys(exact, idCol, "__bk", "__id"), exact, idCol,
+            vecCol, threshold, maxBucket = 10000) // the bucketed default
           .select(col("idA"), col("idB"))
         Dedup.collapseNearDups(exact, idCol, pairs)
       },
-      bandKeys = df => Similarity.corpusLshKeys(df, idCol, vecCol,
-        planesPerBand, bands),
-      linkedIds = (novel, keys, corpus) =>
-        Similarity.incrementalCosineNearDupsWithKeys(novel, keys, corpus,
-          idCol, vecCol, threshold, planesPerBand, bands))
+      verify = (cands, novel, corpus) => Similarity.verifyCosineCandidates(
+        Similarity.batchVectors(novel, idCol, vecCol), cands, corpus, idCol,
+        vecCol, threshold),
+      healKeys = df => Similarity.corpusLshKeys(df, idCol, vecCol,
+        planesPerBand, bands))
   }
 
   /** Streaming IVFADC index maintenance — the ingest arm of the stored

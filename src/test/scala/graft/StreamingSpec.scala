@@ -1118,6 +1118,132 @@ class StreamingSpec extends SparkSuite {
     assert(spark.read.parquet(keys).count() === 2 * (8L + 1)) // + band -1
   }
 
+  /** Writes `docs` as one parquet file into a fresh dir; returns it. */
+  private def keyedDocs(prefix: String, docs: (Long, String)*): String = {
+    import spark.implicits._
+    val dir = tmp(prefix)
+    docs.toDF("doc_id", "text").coalesce(1)
+      .write.mode("append").parquet(dir)
+    dir
+  }
+
+  private val keyedBatch1 = Seq(
+    10L -> "alpha beta gamma delta epsilon zeta eta theta",
+    11L -> "alpha beta gamma delta epsilon zeta eta iota",
+    12L -> "one two three four five six seven eight",
+    13L -> "")
+  private val keyedBatch2 = Seq(
+    20L -> "alpha beta gamma delta epsilon zeta eta theta",
+    21L -> "one two three four five six seven nine",
+    22L -> "totally different words appearing nowhere else at all",
+    23L -> "",
+    24L -> "fresh novel content for the keyed ingest check")
+
+  test("ingestNearDupKeyed evaluates each input row once per micro-batch") {
+    // numInputRows counts a source row once per evaluation of the
+    // micro-batch; the gate featurizes the batch into a plan leaf, so
+    // every later step reads that leaf instead of the source files
+    val schema = org.apache.spark.sql.types.StructType.fromDDL(
+      "doc_id LONG, text STRING")
+    val in = tmp("once-in")
+    val corpus = tmp("once-corpus") + "/data"
+    val keys = tmp("once-keys") + "/keys"
+    def run(docs: Seq[(Long, String)], ck: String): Long = {
+      spark.read.parquet(keyedDocs("once-batch", docs: _*))
+        .write.mode("append").parquet(in)
+      val q = EventStreams.ingestNearDupKeyed(spark, schema, in, corpus,
+        keys, ck, "doc_id", "text", threshold = 0.6, numHashes = 16,
+        bands = 8)
+      q.awaitTermination()
+      q.recentProgress.map(_.numInputRows).sum
+    }
+    // first batch: no corpus yet (collapse only)
+    assert(run(keyedBatch1, tmp("once-ck")) === keyedBatch1.size.toLong)
+    // a new run over a new file: heal audit, replay guard, probe
+    assert(run(keyedBatch2, tmp("once-ck2")) ===
+      (keyedBatch1 ++ keyedBatch2).size.toLong)
+  }
+
+  test("one keyed ingest batch stays within its Spark job budget") {
+    // the fixed per-batch scheduling cost of the keyed gate: a step that
+    // re-derives the batch inside its own plan instead of reading the
+    // featurized leaves shows up here as extra jobs. Before the gate
+    // featurized each batch once into plan leaves, this steady-state
+    // batch ran 53 jobs; it runs 34 now (the bound leaves room for an
+    // AQE re-plan or two).
+    val corpus = tmp("budget-corpus") + "/data"
+    val keys = tmp("budget-keys") + "/keys"
+    def batch(docs: Seq[(Long, String)]) =
+      spark.read.parquet(keyedDocs("budget-in", docs: _*))
+    val healed = new java.util.concurrent.atomic.AtomicBoolean(false)
+    EventStreams.ingestNearDupKeyedBatch(spark, batch(keyedBatch1), corpus,
+      keys, "doc_id", "text", threshold = 0.6, numHashes = 16, bands = 8,
+      healed)
+    healed.set(true) // steady state: the once-per-run heal already ran
+    val (_, jobs) = jobsDuring(EventStreams.ingestNearDupKeyedBatch(spark,
+      batch(keyedBatch2), corpus, keys, "doc_id", "text", threshold = 0.6,
+      numHashes = 16, bands = 8, healed))
+    assert(jobs <= 36, s"keyed ingest batch ran $jobs jobs")
+    assert(spark.read.parquet(corpus).count() === 5) // 10|11, 12, 13, 22, 24
+  }
+
+  test("a keyed ingest batch releases its materialized frames, success or failure") {
+    // compared as "nothing persisted since the start is left": the
+    // ContextCleaner may drop earlier tests' RDDs while this one runs
+    def persisted() = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    def cached() = org.apache.spark.sql.CacheEntries.count(spark)
+    def batch(docs: Seq[(Long, String)]) =
+      spark.read.parquet(keyedDocs("release-in", docs: _*))
+    def ingest(corpus: String, keys: String, docs: Seq[(Long, String)]) =
+      EventStreams.ingestNearDupKeyedBatch(spark, batch(docs), corpus, keys,
+        "doc_id", "text", threshold = 0.6, numHashes = 16, bands = 8,
+        new java.util.concurrent.atomic.AtomicBoolean(false))
+
+    val (rddsBefore, cacheBefore) = (persisted(), cached())
+    val corpus = tmp("release-corpus") + "/data"
+    val keys = tmp("release-keys") + "/keys"
+    ingest(corpus, keys, keyedBatch1)
+    ingest(corpus, keys, keyedBatch2) // heal, replay guard and probe run
+    assert(spark.read.parquet(corpus).count() === 5)
+    assert(persisted().diff(rddsBefore) === Set.empty)
+    assert(cached() === cacheBefore)
+
+    // keysDir occupied by a plain file: the corpus append has read every
+    // materialized frame when the key append throws
+    val blocked = tmp("release-blocked")
+    Files.writeString(java.nio.file.Paths.get(blocked, "keys"), "not a dir")
+    val failedCorpus = tmp("release-failed") + "/data"
+    intercept[Exception](ingest(failedCorpus, s"$blocked/keys", keyedBatch1))
+    assert(spark.read.parquet(failedCorpus).count() === 3)
+    assert(persisted().diff(rddsBefore) === Set.empty)
+    assert(cached() === cacheBefore)
+  }
+
+  test("the keyed gates' per-row key arrays explode to the key-table builds' rows") {
+    // the gates append the keys they computed once per batch, while the
+    // heal re-keys through corpusBandKeys / corpusLshKeys: the two must
+    // produce the same (id, band, key) rows or a healed corpus would
+    // stop matching its own replays
+    import graft.ops.{Dedup, Similarity}
+    def rows(df: org.apache.spark.sql.DataFrame, idCol: String) = df
+      .select(col(idCol).cast("long"), col("band"), col("key"))
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
+    val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
+    val textKeys = rows(Dedup.explodeKeys(docs.select(col("doc_id"),
+      Dedup.bandKeyArray(col("text"), 16, 8, md5Basis = false).as("__bk")),
+      "doc_id", "__bk", "doc_id"), "doc_id")
+    assert(textKeys.nonEmpty)
+    assert(textKeys === rows(Dedup.corpusBandKeys(docs, "doc_id", "text",
+      numHashes = 16, bands = 8), "doc_id"))
+    val emb = Tables.embeddings(spark, sfDir).select("vec_id", "embedding")
+    val vecKeys = rows(Dedup.explodeKeys(emb.select(col("vec_id"),
+      Similarity.lshKeyArray(col("embedding"), 4, 4).as("__bk")),
+      "vec_id", "__bk", "vec_id"), "vec_id")
+    assert(vecKeys.nonEmpty)
+    assert(vecKeys === rows(Similarity.corpusLshKeys(emb, "vec_id",
+      "embedding", planesPerBand = 4, bands = 4), "vec_id"))
+  }
+
   test("sessionize never moves a session's bounds backwards on cross-batch disorder") {
     // drives the per-chunk state machine directly: a streaming two-batch
     // run of sessionize can't terminate under AvailableNow
