@@ -95,24 +95,43 @@ object Statistics {
     * the raw URI resolves on the file's own filesystem when fed back
     * into `spark.read` — the normalized key would resolve against the
     * session default FS with the scheme stripped.
+    *
+    * The listing sees what `spark.read.parquet` of `dir` reads: names
+    * Spark's file index treats as hidden ([[hiddenName]]) are skipped,
+    * files and directories alike — so an interrupted append's
+    * uncommitted `_temporary/.../part-*.parquet` is neither counted nor
+    * footer-read. The walk is `listStatus` per directory, not
+    * `listFiles(root, true)`: on the local filesystem without native IO
+    * every `LocatedFileStatus` that `listFiles` builds loads its
+    * permissions by forking `ls` (Spark's own `HadoopFSUtils` avoids that
+    * constructor for the same reason).
     */
   def listParquetFilesRaw(spark: org.apache.spark.sql.SparkSession,
       dir: String): Seq[(String, String, Long)] = {
     val root = new org.apache.hadoop.fs.Path(dir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) Seq.empty
-    else {
-      val it = fs.listFiles(root, true)
-      val buf = Seq.newBuilder[(String, String, Long)]
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.isFile && st.getPath.getName.endsWith(".parquet"))
+    val buf = Seq.newBuilder[(String, String, Long)]
+    def walk(d: org.apache.hadoop.fs.Path): Unit =
+      fs.listStatus(d).foreach { st =>
+        val name = st.getPath.getName
+        if (hiddenName(name)) ()
+        else if (st.isDirectory) walk(st.getPath)
+        else if (name.endsWith(".parquet"))
           buf += ((st.getPath.toString,
             uriPath(st.getPath.toUri.toString), st.getLen))
       }
-      buf.result().sortBy(_._2)
-    }
+    if (fs.exists(root)) walk(root)
+    buf.result().sortBy(_._2)
   }
+
+  /** Spark's file-index rule for names a table read skips: `_`- and
+    * `.`-prefixed names (job scratch such as `_temporary`, `_SUCCESS`,
+    * checksum files), except the Parquet summary files and `_`-names
+    * carrying a partition `=`.
+    */
+  private def hiddenName(name: String): Boolean =
+    ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".")) &&
+      !name.startsWith("_metadata") && !name.startsWith("_common_metadata")
 
   /** A10 with byte sizes (aggregator.yml:140-149's file_stats): records
     * per file from one scan-side aggregate, byte length from the FS

@@ -29,7 +29,10 @@ object Enricher {
     * (test_parquet_processor.py:274-275,332).
     *
     * `numPartitions` sets fetch-stage parallelism (0 = auto via
-    * [[graft.ops.Dedup.spread]]).
+    * [[graft.ops.Dedup.spread]], given the window form's known single
+    * partition — no probe — or the distributed rank's probed count). It
+    * sets the fetch only: a window-indexed batch still writes one file
+    * per sink.
     *
     * `distributedIndex = true` switches `batch_index` assignment from
     * the single-partition `row_number` window to a range-partitioned
@@ -115,8 +118,9 @@ object Enricher {
   def enrich(urls: DataFrame, fetcherFactory: () => Fetcher,
       config: Config = Config()): Enriched = {
     val cfg = config
+    val windowed = !cfg.distributedIndex && !exceedsWindowBound(urls, cfg)
     val (indexed0, pins) =
-      if (cfg.distributedIndex || exceedsWindowBound(urls, cfg)) {
+      if (!windowed) {
         val (df, pin) = distributedRank(urls, cfg)
         (df, Seq(pin))
       } else {
@@ -125,9 +129,12 @@ object Enricher {
           row_number().over(w).cast("long") - 1 + cfg.startIndex),
           Seq.empty[DataFrame])
       }
+    // the window's output is one partition by construction: spread it
+    // on that known count instead of probing the plan for it
     val indexed =
       if (cfg.numPartitions > 0) indexed0.repartition(cfg.numPartitions)
-      else graft.ops.Dedup.spread(indexed0)
+      else graft.ops.Dedup.spread(indexed0,
+        if (windowed) Some(1) else None)
 
     val unified = indexed.mapPartitions { it =>
         val fetcher = fetcherFactory()
@@ -148,9 +155,17 @@ object Enricher {
 
     // One pass feeds two sinks: persist so the split doesn't re-fetch.
     unified.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val records = unified.where(!col("__dead"))
+    // A window-indexed batch is bounded by windowIndexMaxRows, so each
+    // sink writes it as ONE file (one shard per batch, like the
+    // reference's processor) instead of one per fetch partition. The
+    // fetch stays numPartitions wide only because AQE runs the cached
+    // pass as its own query stage (a TableCacheQueryStage) before the
+    // coalesced read: without AQE, coalesce(1) would pull the whole
+    // fetch into the one write task (PipelineSpec pins the fetch width).
+    val sinkSide = if (windowed) unified.coalesce(1) else unified
+    val records = sinkSide.where(!col("__dead"))
       .select(MediaSchema.superset.fieldNames.map(col).toSeq: _*)
-    val dead = unified.where(col("__dead")).select(
+    val dead = sinkSide.where(col("__dead")).select(
       col("url"), col("batch_index").as("index"),
       col("__reason").as("reason"), col("processing_time"),
       col("attempt").as("attempts"))

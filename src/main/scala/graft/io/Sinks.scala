@@ -14,7 +14,10 @@ import org.apache.spark.sql.DataFrame
 object Sinks {
 
   /** K1: append a batch of records as a new parquet shard
-    * (reference test_parquet_processor.py:391-401).
+    * (reference test_parquet_processor.py:391-401). Writes one part file
+    * per partition of `df`: a processor batch arrives as one partition
+    * (`Enricher.enrich` coalesces its window-indexed output), so one
+    * batch appends one shard file.
     */
   def appendParquet(df: DataFrame, dir: String): Unit =
     df.write.mode("append").parquet(dir)

@@ -29,10 +29,18 @@ object Dedup {
     * one or two parquet row-groups — without this, scan-side kernels run
     * on one core. No-op (no shuffle) when the input is already wider
     * than half the default parallelism, i.e. always at production scale.
+    *
+    * `knownPartitions` is the input's partition count when the caller
+    * knows it by construction (the enrichment's `row_number` window is
+    * one partition). Without it the count is probed with
+    * `df.rdd.getNumPartitions`, which plans — and, under AQE, runs — the
+    * input's exchanges once more just to read the number.
     */
-  private[graft] def spread(df: DataFrame): DataFrame = {
+  private[graft] def spread(df: DataFrame,
+      knownPartitions: Option[Int] = None): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < (target + 1) / 2) df.repartition(target)
+    val parts = knownPartitions.getOrElse(df.rdd.getNumPartitions)
+    if (parts < (target + 1) / 2) df.repartition(target)
     else df
   }
 

@@ -60,10 +60,12 @@ object Pipelines {
     // jobs, all in the cancellable group below (PipelineSpec pins the
     // count with a SparkListener): (1) the shuffle-map stage of the
     // slice + row_number window ahead of the enrichment's repartition,
-    // (2) the fetch pass that fills the cached enrichment, (3) the shard
-    // write and (4) the dead-letter write. The url list reads with a
-    // pinned schema (no inference job) and the slice's limit proves the
-    // window bound statically (no probe job).
+    // (2) the fetch pass that fills the cached enrichment, one task per
+    // fetch partition, (3) the shard write and (4) the dead-letter
+    // write, one task and one file each. The url list reads with a
+    // pinned schema (no inference job), the slice's limit proves the
+    // window bound statically (no probe job), and the window's one
+    // partition is known, not probed, when the fetch is spread.
     // error_count follows the reference's semantics: every failed ATTEMPT
     // counts, including transient failures that later succeeded (attempt>1
     // means attempt-1 failures) and every attempt behind a dead letter.

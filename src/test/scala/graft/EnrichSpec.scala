@@ -170,8 +170,8 @@ class EnrichSpec extends SparkSuite {
     // check must run its probe job; limit(n) with n <= the bound proves
     // the bound in the plan (as Sources.slice does for every processor
     // batch) and enrich() then starts no job at all. A fixed
-    // numPartitions keeps Dedup.spread (whose partition count can
-    // materialize the window's input exchange) out of the count.
+    // numPartitions keeps Dedup.spread out of this case; the
+    // default-config case below covers it.
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{StringType, StructField, StructType}
     val fetcher = () => new SyntheticFetcher(
@@ -195,6 +195,39 @@ class EnrichSpec extends SparkSuite {
     assert(bounded.records.select("batch_index").collect().map(_.getLong(0))
       .sorted.toSeq === (3L until 33L))
     probed.release(); bounded.release()
+  }
+
+  test("default config: a limit-bounded frame starts no job, not even a partition probe") {
+    // no numPartitions: the fetch is spread from the window's known
+    // single partition, so nothing plans or runs the window to count it
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    val rows = (0 until 40).map(i => Row(f"https://example.org/p/$i%02d"))
+    val urls = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2),
+      StructType(Seq(StructField("url", StringType)))).limit(30)
+    val (out, jobs) = jobsDuring(Enricher.enrich(urls,
+      () => new SyntheticFetcher(failFirstSuffix = "zz", alwaysFailPrefix = "zz"),
+      Enricher.Config(startIndex = 3, windowIndexMaxRows = 30)))
+    assert(jobs === 0, s"$jobs job(s) for a limit-bounded frame")
+    assert(out.records.select("batch_index").collect().map(_.getLong(0))
+      .sorted.toSeq === (3L until 33L))
+    out.release()
+  }
+
+  test("window-indexed sinks write one file; the distributed rank one per fetch partition") {
+    val urls = (0 until 60).map(i => f"https://example.org/s/$i%02d")
+    val fetcher = () => new SyntheticFetcher(
+      failFirstSuffix = "zz", alwaysFailPrefix = "zz")
+    def files(out: Enricher.Enriched): Int = {
+      val dir = Files.createTempDirectory("graft-enrich-sink").resolve("shards")
+      graft.io.Sinks.appendParquet(out.records, dir.toString)
+      out.release()
+      dir.toFile.listFiles().count(_.getName.startsWith("part-"))
+    }
+    assert(files(Enricher.enrich(urlDf(urls), fetcher,
+      Enricher.Config(numPartitions = 3))) === 1)
+    assert(files(Enricher.enrich(urlDf(urls), fetcher,
+      Enricher.Config(numPartitions = 3, distributedIndex = true))) === 3)
   }
 
   test("media-type-conditional columns: offered section fields masked by type") {

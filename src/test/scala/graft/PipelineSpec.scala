@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import graft.enrich.SyntheticFetcher
 import graft.io.{Sinks, Sources}
 import graft.pipeline.{Cursor, Pipelines}
@@ -294,6 +296,96 @@ class PipelineSpec extends SparkSuite {
     assert(!new java.io.File(s"$out/agg/statistics.json").exists)
   }
 
+  test("aggregator skips an interrupted append's uncommitted part file") {
+    val out = Files.createTempDirectory("graft-uncommitted").toString
+    writeShards(s"$out/shards", 2)
+    // a processor whose driver died mid-write leaves its task output
+    // under the job's _temporary tree, possibly cut off: spark.read of
+    // the tree skips it, so the aggregator's listing must too — neither
+    // footer-read nor counted as a shard
+    val whole = new java.io.File(s"$out/shards/s00.parquet").listFiles()
+      .find(_.getName.endsWith(".parquet")).get
+    val bytes = Files.readAllBytes(whole.toPath)
+    val attempt = java.nio.file.Path.of(s"$out/shards/_temporary/0/" +
+      "_temporary/attempt_202610180000_0001_m_000000_0")
+    Files.createDirectories(attempt)
+    Files.write(attempt.resolve("part-00000-uncommitted.snappy.parquet"),
+      bytes.take(bytes.length / 2))
+    val stats = Pipelines.aggregator(spark, s"$out/shards", s"$out/agg")
+    assert(stats.totalRecords === 2L)
+    val json = Files.readString(java.nio.file.Paths.get(s"$out/agg/statistics.json"))
+    assert(json.contains("\"files_combined\": 2,"), json)
+  }
+
+  test("shard listing matches a java.nio walk of a nested tree, hidden names skipped") {
+    val root = Files.createTempDirectory("graft listing walk")
+    import spark.implicits._
+    def shard(rel: String): Unit =
+      Seq(("u", 1L)).toDF("url", "batch_index").coalesce(1)
+        .write.mode("append").parquet(root.resolve(rel).toString)
+    shard("a"); shard("a/b c/d"); shard("e=1"); shard("_f=2")
+    // hidden: scratch dirs, dot/underscore files, and non-parquet names
+    shard("_temporary/0"); shard(".staging")
+    Files.write(root.resolve("a/.part-hidden.parquet"), Array[Byte](1))
+    Files.write(root.resolve("a/_part-hidden.parquet"), Array[Byte](1))
+    def hidden(p: java.nio.file.Path) = root.relativize(p).iterator()
+      .asScala.exists { n =>
+        val s = n.toString
+        (s.startsWith("_") && !s.contains("=")) || s.startsWith(".")
+      }
+    val walk = Files.walk(root)
+    val expected = try walk.iterator().asScala
+      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".parquet") &&
+        !hidden(p))
+      .map(p => (p.toAbsolutePath.toString, Files.size(p))).toSeq
+      .sortBy(_._1)
+      finally walk.close()
+    assert(expected.size === 4)
+    def local(uri: java.net.URI) = java.nio.file.Paths.get(uri).toString
+    val listed = graft.agg.Statistics.listParquetFilesRaw(spark, root.toString)
+    // raw Hadoop URIs resolve back to the files with their exact sizes;
+    // the normalized keys are sorted and keep the space percent-encoded
+    assert(listed.map { case (raw, _, len) =>
+      (local(new org.apache.hadoop.fs.Path(raw).toUri), len)
+    }.sortBy(_._1) === expected)
+    assert(listed.map(_._2) === listed.map(_._2).sorted)
+    assert(listed.forall(_._2.contains("graft%20listing%20walk")))
+    // the listing is exactly what a table read of the tree sees
+    val read = spark.read.option("recursiveFileLookup", true)
+      .parquet(root.toString).inputFiles.map(f => local(new java.net.URI(f))).toSet
+    assert(read === expected.map(_._1).toSet)
+  }
+
+  test("one processor batch appends one shard and one dead-letter file, fetched wide") {
+    val urlPath = writeUrlList(200)
+    val out = Files.createTempDirectory("graft-onefile").toString
+    // md5 prefix "0" dead-letters ~1/16 of the urls, so both sinks see rows
+    val fetcher = () => {
+      FetchStages.seen.add(org.apache.spark.TaskContext.get().stageId())
+      new SyntheticFetcher(alwaysFailPrefix = "0")
+    }
+    def batch() = Pipelines.processor(spark, urlPath, out, fetcher,
+      maxRecords = 100, cursorPath = s"$out/cursor.txt", totalTarget = 200,
+      enrichConfig = fastEnrich)
+    def parts(sink: String) = Option(new java.io.File(s"$out/$sink").listFiles())
+      .getOrElse(Array.empty).count(_.getName.startsWith("part-"))
+    val (c1, jobs) = jobsDuring(batch())
+    assert(jobs === 4)
+    assert(c1.skippedCount > 0, "the batch must dead-letter some urls")
+    assert((parts("shards"), parts("dead_letter")) === ((1, 1)))
+    FetchStages.seen.clear()
+    val (c2, widths) = stageWidthsDuring(batch())
+    assert(c2.totalProcessed === 200)
+    assert((parts("shards"), parts("dead_letter")) === ((2, 2)))
+    // the fetch ran in one stage, as wide as the cluster — not inside
+    // the one-task sink writes
+    assert(FetchStages.seen.size === 1, FetchStages.seen)
+    assert(widths(FetchStages.seen.iterator().next()) ===
+      spark.sparkContext.defaultParallelism, widths)
+    assert(Sources.parquetTreeMerged(spark, s"$out/shards").count() +
+      c2.skippedCount === 200L)
+  }
+
   test("aggregator sizes combined parts by bytes, floored at min(files, cores)") {
     val out = Files.createTempDirectory("graft-sinks").toString
     writeShards(s"$out/shards", 12)
@@ -491,4 +583,10 @@ class PipelineSpec extends SparkSuite {
     assert(lines.length === 2)
     assert(lines.forall(l => l.startsWith("{") && l.endsWith("}")))
   }
+}
+
+/** Stage ids the fetchers of one [[PipelineSpec]] batch were made in. */
+object FetchStages {
+  val seen: java.util.Set[Int] =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
 }

@@ -32,11 +32,27 @@ abstract class SparkSuite extends AnyFunSuite {
     * marker job run after `body` — delivered in order — flushes it.
     */
   def jobsDuring[T](body: => T): (T, Int) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val (r, jobs, _) = scheduledDuring(body)
+    (r, jobs)
+  }
+
+  /** `body`'s result and the task count of every stage it submitted,
+    * by stage id (stages skipped as already computed are absent) — the
+    * width a stage actually ran at, told apart like [[jobsDuring]].
+    */
+  def stageWidthsDuring[T](body: => T): (T, Map[Int, Int]) = {
+    val (r, _, widths) = scheduledDuring(body)
+    (r, widths)
+  }
+
+  private def scheduledDuring[T](body: => T): (T, Int, Map[Int, Int]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+      SparkListenerStageSubmitted}
     val sc = spark.sparkContext
     val key = "graft.spec.jobsDuring"
     val tag = java.util.UUID.randomUUID().toString
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val widths = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
     val flushed = new java.util.concurrent.CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
@@ -45,6 +61,9 @@ abstract class SparkSuite extends AnyFunSuite {
           case Some(t) if t == tag + "-marker" => flushed.countDown()
           case _ =>
         }
+      override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit =
+        if (Option(s.properties).map(_.getProperty(key)).contains(tag))
+          widths.put(s.stageInfo.stageId, s.stageInfo.numTasks)
     }
     sc.addSparkListener(listener)
     try {
@@ -53,7 +72,8 @@ abstract class SparkSuite extends AnyFunSuite {
       sc.parallelize(Seq(1), 1).count()
       assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS),
         "listener bus never delivered the marker job")
-      (r, jobs.get)
+      import scala.jdk.CollectionConverters._
+      (r, jobs.get, widths.asScala.toMap)
     } finally {
       sc.setLocalProperty(key, null)
       sc.removeSparkListener(listener)

@@ -83,6 +83,10 @@ class StreamingSpec extends SparkSuite {
     assert(first.count() === 2)
     assert(first.columns.contains("media_type") &&
       first.columns.contains("micro_batch_id"))
+    // one shard file per micro-batch, like the batch processor's batches
+    def shardFiles = new java.io.File(s"$out/shards").listFiles()
+      .count(_.getName.startsWith("part-"))
+    assert(shardFiles === 1)
 
     // a new file arrives: only it is processed on resume
     Seq("""[{"url": "http://a/3"}]""")
@@ -91,6 +95,7 @@ class StreamingSpec extends SparkSuite {
       () => new graft.enrich.SyntheticFetcher).awaitTermination()
     val after = spark.read.parquet(s"$out/shards")
     assert(after.count() === 3)
+    assert(shardFiles === 2)
     assert(after.select("url").as[String].collect().sorted ===
       Array("http://a/1", "http://a/2", "http://a/3"))
   }
