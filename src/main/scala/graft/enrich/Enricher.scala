@@ -34,32 +34,24 @@ object Enricher {
     * sets the fetch only: a window-indexed batch still writes one file
     * per sink.
     *
-    * `distributedIndex = true` switches `batch_index` assignment from
-    * the single-partition `row_number` window to a range-partitioned
-    * rank (sample bounds → per-partition sort → offset by preceding
-    * partition counts): the SAME url-order rank, bit-identical indices
-    * (equivalence is spec-pinned), with no single-partition sort. The
-    * default stays the window form — the processor's `maxRecords`
-    * micro-batch contract bounds it and it is one job instead of two.
-    * Callers feeding enrich() an UNBOUNDED frame directly (outside the
-    * processor contract) set this flag.
-    *
-    * `windowIndexMaxRows` ENFORCES that contract instead of trusting it
-    * (round-11 hardening): when `distributedIndex = false`, enrich()
-    * checks the frame against the bound (see [[exceedsWindowBound]]:
-    * the optimizer's static row bound where it proves the frame fits —
-    * the processor's sliced batches — else a LocalLimit-bounded probe
-    * job over at most bound + 1 url rows, never a full scan of an
-    * unbounded list) and auto-switches to the distributed rank above
-    * the bound. The indices are bit-identical either way, so
-    * in-contract callers see no behavior change; an out-of-contract
-    * caller that forgot the flag gets the scalable path instead of a
-    * driver-killing single-partition sort. `Int.MaxValue` disables the
-    * check (trust the caller — the pre-round-11 behavior).
+    * `batch_index` is a url-order rank, assigned one of two ways with
+    * bit-identical indices (equivalence is spec-pinned): the one-job
+    * single-partition `row_number` window, or [[distributedRank]] — a
+    * range-partitioned rank (sample bounds → per-partition sort →
+    * offset by preceding partition counts) with no single-partition
+    * sort. The input size picks the path: `windowIndexMaxRows` is the
+    * processor's `maxRecords` micro-batch contract, and enrich()
+    * checks the frame against it (see [[exceedsWindowBound]]: the
+    * optimizer's static row bound where it proves the frame fits — the
+    * processor's sliced batches — else a LocalLimit-bounded probe job
+    * over at most bound + 1 url rows, never a full scan of an unbounded
+    * list). Frames within the bound take the window; larger frames
+    * take the distributed rank instead of a driver-killing
+    * single-partition sort. `Int.MaxValue` disables the check (trust
+    * the caller: always the window).
     */
   case class Config(maxAttempts: Int = 2, recordTimeoutMs: Long = 10000,
       backoffMs: Long = 1000, startIndex: Long = 0, numPartitions: Int = 0,
-      distributedIndex: Boolean = false,
       windowIndexMaxRows: Int = 200000)
 
   val deadLetterSchema =
@@ -107,18 +99,16 @@ object Enricher {
     * detour). The global window sorts on a single partition, which is fine
     * because the processor bounds each micro-batch by `maxRecords`; the
     * fetch stage is re-spread to `numPartitions` afterwards so retry
-    * backoffs and slow fetches run in parallel. Callers OUTSIDE that
-    * contract (an unbounded url frame fed to enrich() directly) set
-    * `Config.distributedIndex` — [[distributedRank]] assigns the
-    * identical indices with no single-partition sort — and since round
-    * 11 the contract is enforced, not just documented: a frame larger
-    * than `Config.windowIndexMaxRows` takes the distributed path
-    * automatically (see [[exceedsWindowBound]]).
+    * backoffs and slow fetches run in parallel. The contract is
+    * enforced, not just documented: a frame larger than
+    * `Config.windowIndexMaxRows` (an unbounded url frame fed to enrich()
+    * directly) takes [[distributedRank]], which assigns the identical
+    * indices with no single-partition sort (see [[exceedsWindowBound]]).
     */
   def enrich(urls: DataFrame, fetcherFactory: () => Fetcher,
       config: Config = Config()): Enriched = {
     val cfg = config
-    val windowed = !cfg.distributedIndex && !exceedsWindowBound(urls, cfg)
+    val windowed = !exceedsWindowBound(urls, cfg)
     val (indexed0, pins) =
       if (!windowed) {
         val (df, pin) = distributedRank(urls, cfg)
@@ -190,8 +180,8 @@ object Enricher {
       urls.select(col("url")).limit(cfg.windowIndexMaxRows + 1).count() >
         cfg.windowIndexMaxRows
 
-  /** The distributed `batch_index` assignment behind
-    * `Config.distributedIndex`: range-partition by url, sort within
+  /** The distributed `batch_index` assignment for frames past
+    * `Config.windowIndexMaxRows`: range-partition by url, sort within
     * partitions, then `zipWithIndex` — the same url-order global rank
     * the window form computes, with no single-partition sort
     * (equivalence spec-pinned in EnrichSpec).

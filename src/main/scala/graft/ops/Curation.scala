@@ -191,9 +191,10 @@ object Curation {
     // stages below reference the curated frame several times, and
     // without the cache each reference replayed the whole chain
     // (measured: 4 gram-stats evaluations / 4 corpus scans in q71's
-    // plan, zero exchange reuse). Spark's ContextCleaner unpersists it
-    // once the returned frame is unreachable (the clusterLabels
-    // discipline).
+    // plan, zero exchange reuse). The session CacheManager holds this
+    // entry strongly — the ContextCleaner never reclaims it — so it is
+    // released when the caller unpersists it or clears the cache (the
+    // bench/verify harnesses clear it between queries).
     val kept = curate(corpus, bench, idCol, textCol, minTokens,
       maxDupGramFraction, contaminationN).select(col(idCol))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

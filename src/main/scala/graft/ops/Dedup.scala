@@ -64,20 +64,19 @@ object Dedup {
     * carries per-row kernel work.
     *
     * Lifecycle: SQL-cached Datasets are held strongly by the
-    * CacheManager and are NOT reclaimed by the ContextCleaner, so a
-    * caller that runs many probe+action cycles in one session (the
-    * unkeyed `ingestNearDup` gate) must release them — wrap the
-    * probe-and-act cycle in [[PinScope.withScope]] and every pin under
-    * it unpersists when the cycle's actions complete. One-shot batch
-    * queries may skip the scope (the bench/verify harnesses clear the
-    * cache between queries). The keyed ingest gates do not pin: they
-    * hold their batch-sized frames as [[materialize]]d plan leaves.
+    * CacheManager and are NOT reclaimed by the ContextCleaner. The
+    * callers are one-shot queries ([[incrementalNearDupsWithKeys]],
+    * `Similarity.incrementalCosineNearDupsWithKeys`,
+    * `Curation.curateCcnet`), and their one release path is the owner
+    * of the session: it unpersists the cached plans or clears the
+    * cache once the result is consumed (the bench/verify harnesses
+    * clear it between queries). Code that runs probe-and-act cycles
+    * for the life of a session must not pin: the streaming gates hold
+    * their batch-sized frames as [[materialize]]d plan leaves and
+    * release them in a `finally`.
     */
-  private[graft] def pinSmall(df: DataFrame): DataFrame = {
-    val pinned = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    PinScope.track(pinned)
-    pinned
-  }
+  private[graft] def pinSmall(df: DataFrame): DataFrame =
+    df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
   /** Materialize `df` as a plan leaf: persist its RDD (MEMORY_AND_DISK,
     * lazily — the first job that reads it fills it) and rebuild a frame
@@ -1529,53 +1528,5 @@ object Dedup {
       .select(col("idA"), col("idB"),
         hammingDistance(col("__sa"), col("__sb")).as("hamming"))
       .where(col("hamming") <= maxBits)
-  }
-}
-
-/** Deterministic release scope for [[Dedup.pinSmall]] pins.
-  *
-  * SQL-cached Datasets are held strongly by the session's CacheManager
-  * and never reclaimed by the ContextCleaner, so operators that pin
-  * per-invocation intermediates (the keyed probes) would grow the cache
-  * without bound under a long-running caller — ~3 entries per streaming
-  * micro-batch (r14 advisor finding). A caller that owns the action
-  * wraps probe-construction AND the action in [[withScope]]; every pin
-  * created under it is unpersisted (non-blocking) when the body
-  * returns. Scopes are thread-local (a structured-streaming batch body
-  * runs on one thread) and nest; pins created with no active scope keep
-  * the old behavior (released by the harness cache clear / session end).
-  *
-  * The action that consumes the pinned frames MUST run inside the scope
-  * and on the thread that opened it: a frame returned out of the scope
-  * (or handed to another thread) reads pins that are already released,
-  * and its plan silently recomputes the pinned subtrees. Today the
-  * unkeyed `ingestNearDup` gate is the one streaming caller; the keyed
-  * gates no longer pin (their batch-sized frames are plan leaves they
-  * release themselves, see [[Dedup.materialize]]).
-  */
-private[graft] object PinScope {
-  private val active =
-    new ThreadLocal[scala.collection.mutable.ArrayBuffer[DataFrame]]
-
-  /** Record `df` with the innermost active scope on this thread
-    * (no-op when none is active).
-    */
-  def track(df: DataFrame): Unit = {
-    val buf = active.get()
-    if (buf != null) { buf += df; () }
-  }
-
-  /** Run `body` — construction plus the actions that consume the
-    * pinned frames — then unpersist every pin it created.
-    */
-  def withScope[T](body: => T): T = {
-    val outer = active.get()
-    val buf = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    active.set(buf)
-    try body
-    finally {
-      active.set(outer)
-      buf.foreach(_.unpersist(blocking = false))
-    }
   }
 }

@@ -42,10 +42,11 @@ object Packing {
 
   /** Leak-free variant for long-lived sessions: runs `use` over the
     * packed frame (write it, collect it — any materializing action),
-    * then unpersists the internal prefix-sum pin immediately instead of
-    * waiting for the returned plan to be garbage-collected and
-    * ContextCleaner to reclaim the MEMORY_AND_DISK blocks. Do NOT let
-    * the frame escape `use` — its plan reads the unpersisted pin.
+    * then unpersists the internal prefix-sum pin. [[packSequences]]
+    * leaves that pin in the session CacheManager, which holds it
+    * strongly (the ContextCleaner never reclaims a `Dataset.persist`)
+    * until the cache is cleared. Do NOT let the frame escape `use` —
+    * its plan reads the unpersisted pin.
     */
   def withPackedSequences[T](df: DataFrame, idCol: String, textCol: String,
       budget: Long)(use: DataFrame => T): T = {
@@ -62,9 +63,10 @@ object Packing {
     * RangePartitioner boundaries come from sampling — an unpinned
     * recompute could place rows differently and mismatch the branches.
     * Eager unpersist here would be wrong (the returned plan still reads
-    * the pin); blocks are reclaimed by Spark's ContextCleaner once the
-    * result is garbage-collected, or by an explicit caller unpersist
-    * after materializing.
+    * the pin). The session CacheManager holds the pin strongly — the
+    * ContextCleaner never reclaims it — so it is released only by the
+    * caller unpersisting it after materializing (the `with…` variants
+    * do) or by a cache clear.
     */
   private def prefixSummed(df: DataFrame, orderCols: Seq[Column],
       valueCol: String): (DataFrame, DataFrame) = {

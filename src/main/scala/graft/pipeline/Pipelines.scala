@@ -270,6 +270,7 @@ object Pipelines {
     // → /bucket/x) and keeps percent-encoding (a space in a local
     // checkout path), resolving against the wrong filesystem.
     val listed = Statistics.listParquetFilesRaw(spark, shardsDir)
+    require(listed.nonEmpty, s"no parquet shard file under $shardsDir")
     val fields = footerFieldNames(spark, listed.map(_._1))
     val (okListed, badListed) = listed.partition { case (uri, _, _) =>
       (MediaSchema.requiredColumns -- fields(uri)).isEmpty

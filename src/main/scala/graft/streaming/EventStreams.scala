@@ -462,59 +462,6 @@ object EventStreams {
     }
   }
 
-  /** Continuous-ingest NEAR-dedup: each micro-batch is collapsed
-    * locally (exact + MinHash-LSH near-dup survivors via
-    * [[graft.ops.Dedup.nearDupPipeline]]), then batch survivors
-    * near-linked to ANY corpus document ([[graft.ops.Dedup.incrementalNearDups]]
-    * — band-key equi-join between sides, capped corpus buckets,
-    * Jaccard-verified) are dropped before the append. The corpus grows
-    * with only novel content: exact replays self-filter, paraphrase
-    * floods collapse to one survivor per cluster per batch.
-    *
-    * Scale: the corpus side contributes band keys through a narrow
-    * projection; store the corpus bucketed by band key and each batch's
-    * join probes only matching buckets. Within-batch collapse cost is
-    * micro-batch-sized (maxFilesPerTrigger bounds it).
-    */
-  def ingestNearDup(spark: SparkSession, schema: StructType, inDir: String,
-      corpusDir: String, checkpointDir: String, idCol: String,
-      textCol: String, threshold: Double, numHashes: Int = 16,
-      bands: Int = 8, maxFilesPerTrigger: Int = 16,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    import graft.ops.Dedup
-    launchGate(spark, schema, inDir, checkpointDir, maxFilesPerTrigger,
-        trigger) { (batch, _) =>
-      // probe pins (Dedup.pinSmall under incrementalNearDups) release
-      // when the batch's append completes — unscoped they'd accumulate
-      // in the CacheManager for the stream's lifetime (r14 advisor)
-      graft.ops.PinScope.withScope {
-        val local = Dedup.nearDupPipeline(batch, idCol, textCol, threshold,
-          numHashes, bands)
-        val fresh =
-          if (pathExists(spark, corpusDir)) {
-            val corpus = spark.read.schema(schema).parquet(corpusDir)
-            // exact replay guard FIRST: near-LINKING self-filters a
-            // replay only when its content can collide and verify — an
-            // empty token set has NaN Jaccard and never links, so such
-            // rows would re-append on every crash replay. xxhash64
-            // never returns null (null text folds to the hash seed),
-            // so this also covers null-text rows. The corpus is read
-            // per batch here anyway (the unkeyed form); this adds one
-            // narrow fingerprint projection of it.
-            val fp = xxhash64(col(textCol))
-            val novel = local.withColumn("__xfp", fp)
-              .join(corpus.select(fp.as("__xfp")), Seq("__xfp"), "left_anti")
-              .drop("__xfp")
-            val linked = Dedup.incrementalNearDups(novel, corpus, idCol,
-                textCol, threshold, numHashes, bands)
-              .select(col("idA").as(idCol)).distinct()
-            novel.join(linked, Seq(idCol), "left_anti")
-          } else local
-        fresh.write.mode("append").parquet(corpusDir)
-      }
-    }
-  }
-
   /** Default store-file-count compaction trigger of the keyed ingest
     * gates: at one appended file per micro-batch per store, a store is
     * compacted roughly every `DefaultMaxStoreFiles` batches — frequent
@@ -532,9 +479,16 @@ object EventStreams {
     */
   val DefaultMaxStoreFiles: Int = 64
 
-  /** [[ingestNearDup]] with a PERSISTENT corpus band-key table
-    * (`keysDir`) maintained alongside the corpus — the steady-state
-    * form: each batch probes the stored keys
+  /** Continuous-ingest NEAR-dedup: each micro-batch is collapsed
+    * locally (exact + MinHash-LSH near-dup survivors), byte-identical
+    * replays of stored documents are dropped, and batch survivors
+    * near-linked to ANY corpus document (band-key equi-join, capped
+    * buckets, Jaccard-verified) are dropped before the append. The
+    * corpus grows with only novel content: exact replays self-filter,
+    * paraphrase floods collapse to one survivor per cluster per batch.
+    *
+    * The corpus band keys live in a PERSISTENT table (`keysDir`)
+    * maintained alongside the corpus: each batch probes the stored keys
     * (the probe of [[graft.ops.Dedup.incrementalNearDupsWithKeys]])
     * instead of re-hashing the whole corpus, and appends its survivors'
     * keys (the band keys computed once per batch, capped as

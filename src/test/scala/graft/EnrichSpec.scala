@@ -82,7 +82,8 @@ class EnrichSpec extends SparkSuite {
     // scrambled order with skewed-looking keys: the distributed rank
     // (range partitions + per-partition offsets, no single-partition
     // sort) must reproduce the window form's url-order global rank
-    // bit-for-bit, from any input layout
+    // bit-for-bit, from any input layout. windowIndexMaxRows = 0 sends
+    // every non-empty frame down the distributed rank.
     val urls = scala.util.Random.shuffle(
       (0 until 500).map(i => f"https://example.org/m/${(i * 37) % 500}%03d"))
     val fetcher = () => new SyntheticFetcher(
@@ -90,7 +91,7 @@ class EnrichSpec extends SparkSuite {
     val viaWindow = Enricher.enrich(urlDf(urls), fetcher,
       Enricher.Config(startIndex = 77))
     val viaRank = Enricher.enrich(urlDf(urls.reverse), fetcher,
-      Enricher.Config(startIndex = 77, distributedIndex = true,
+      Enricher.Config(startIndex = 77, windowIndexMaxRows = 0,
         numPartitions = 7))
     def pairs(out: Enricher.Enriched) =
       out.records.select("url", "batch_index").collect()
@@ -120,7 +121,7 @@ class EnrichSpec extends SparkSuite {
       val viaWindow = Enricher.enrich(urlDf(urls), fetcher,
         Enricher.Config(startIndex = 5))
       val viaRank = Enricher.enrich(urlDf(rnd.shuffle(urls)), fetcher,
-        Enricher.Config(startIndex = 5, distributedIndex = true,
+        Enricher.Config(startIndex = 5, windowIndexMaxRows = 0,
           numPartitions = 6))
       def pairs(out: Enricher.Enriched) =
         out.records.select("url", "batch_index").collect()
@@ -135,8 +136,7 @@ class EnrichSpec extends SparkSuite {
 
   test("oversized frames auto-switch to the distributed index path") {
     // the maxRecords-contract guard: a frame above windowIndexMaxRows
-    // must take the distributed rank even when the caller left
-    // distributedIndex = false — the analyzed plan of the output
+    // must take the distributed rank — the analyzed plan of the output
     // carries no Window operator (the single-partition sort is gone),
     // an in-bound frame keeps the one-job window form, and the indices
     // are the same contiguous url-order block either way
@@ -227,7 +227,7 @@ class EnrichSpec extends SparkSuite {
     assert(files(Enricher.enrich(urlDf(urls), fetcher,
       Enricher.Config(numPartitions = 3))) === 1)
     assert(files(Enricher.enrich(urlDf(urls), fetcher,
-      Enricher.Config(numPartitions = 3, distributedIndex = true))) === 3)
+      Enricher.Config(numPartitions = 3, windowIndexMaxRows = 0))) === 3)
   }
 
   test("media-type-conditional columns: offered section fields masked by type") {

@@ -72,23 +72,6 @@ class LayoutsSpec extends SparkSuite {
       Dedup.corpusBandKeys(corpus, "doc_id", "text"), "b_corpus_keys",
       "band", spark.conf.get("spark.sql.shuffle.partitions").toInt, "key")
     val stored = spark.table("b_corpus_keys")
-    // the keyed probes register lazy pins (Dedup.pinSmall) with the
-    // CacheManager; the steady-state query below contains plan-equal
-    // fragments (the batch band keys) that cache substitution would
-    // silently replace with InMemoryRelations — hiding the bucketed
-    // scan this test pins. The pin scope releases exactly the probes'
-    // own pins when it closes, leaving the rest of the session's cache
-    // alone: the property under test is the stored table's layout, not
-    // cache interplay.
-    graft.ops.PinScope.withScope {
-      val viaStore = Dedup.incrementalNearDupsWithKeys(
-        batch, stored, corpus, "doc_id", "text", threshold = 0.9)
-      val inline = Dedup.incrementalNearDups(
-        batch, corpus, "doc_id", "text", threshold = 0.9)
-      def rows(df: org.apache.spark.sql.DataFrame) =
-        df.select("idA", "idB").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(rows(viaStore) === rows(inline) && rows(inline).nonEmpty)
-    }
     // steady-state plan: the stored key table is scanned, never rebuilt —
     // its (band, key) bucketing matches the join requirement exactly, so
     // only the batch side exchanges (its spread + window shuffles) and
@@ -113,6 +96,16 @@ class LayoutsSpec extends SparkSuite {
       val exchanges = "Exchange ".r.findAllIn(finalPlan).length
       assert(exchanges <= 4, p)
     }
+    // the probes below cache lazy pins (Dedup.pinSmall); the plan-equal
+    // batch band keys in the check above would read from them — hiding
+    // the bucketed scan it pins — so the probes run after it
+    val viaStore = Dedup.incrementalNearDupsWithKeys(
+      batch, stored, corpus, "doc_id", "text", threshold = 0.9)
+    val inline = Dedup.incrementalNearDups(
+      batch, corpus, "doc_id", "text", threshold = 0.9)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("idA", "idB").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(rows(viaStore) === rows(inline) && rows(inline).nonEmpty)
   }
 
   test("persisted sign-LSH keys: stored embedding probe matches inline") {

@@ -270,9 +270,34 @@ class PipelineSpec extends SparkSuite {
     val out = Files.createTempDirectory("graft-allbad").toString
     Seq(("x", 0.1)).toDF("url", "processing_time")
       .write.parquet(s"$out/shards/only.parquet")
-    intercept[IllegalArgumentException] {
+    val err = intercept[IllegalArgumentException] {
       Pipelines.aggregator(spark, s"$out/shards", s"$out/agg")
     }
+    assert(err.getMessage.contains("satisfies the read contract"), err.getMessage)
+  }
+
+  test("aggregator on a missing shards dir names the dir, not the read contract") {
+    val out = Files.createTempDirectory("graft-noshard").toString
+    val err = intercept[IllegalArgumentException] {
+      Pipelines.aggregator(spark, s"$out/shards", s"$out/agg")
+    }
+    assert(err.getMessage.contains(s"no parquet shard file under $out/shards"),
+      err.getMessage)
+  }
+
+  test("aggregator on a shards dir with no parquet file names the dir") {
+    val out = Files.createTempDirectory("graft-emptyshards").toString
+    // hidden scratch and a non-parquet file: nothing a read would see
+    Files.createDirectories(java.nio.file.Path.of(s"$out/shards/_temporary"))
+    Files.write(java.nio.file.Path.of(s"$out/shards/_SUCCESS"),
+      Array.emptyByteArray)
+    Files.write(java.nio.file.Path.of(s"$out/shards/notes.txt"), "x".getBytes)
+    val err = intercept[IllegalArgumentException] {
+      Pipelines.aggregator(spark, s"$out/shards", s"$out/agg")
+    }
+    assert(err.getMessage.contains(s"no parquet shard file under $out/shards"),
+      err.getMessage)
+    assert(!new java.io.File(s"$out/agg/statistics.json").exists)
   }
 
   test("aggregator fails loudly on a truncated shard") {

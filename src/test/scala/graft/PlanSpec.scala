@@ -349,16 +349,40 @@ class PlanSpec extends SparkSuite {
   }
 
   test("q89: composed CCNet pipeline keeps every gate's scale shape") {
-    val p = formatted("q89_ccnet_pipeline")
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    val df = SparkEntry.queries("q89_ccnet_pipeline")(spark, sfDir)
+    val p = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
     // gate tables join back by doc id as broadcast hash joins; the
     // flagged-id anti join and the top-20 vocabulary broadcast too
     assert(countNodes(p, "BroadcastHashJoin") >= 5, p)
     // the pinned skinny quality frame (r15: id + the two quality
-    // numerics, Dedup.pinSmall) joins back by id; an InMemoryRelation
-    // has no size estimate, so the STATIC plan shows sort-merge for its
-    // two consumers — AQE converts them to broadcast at runtime when
-    // the materialized frame is small. Nothing else may shuffle-join.
+    // numerics, Dedup.pinSmall) prunes every later gate's input by id.
+    // An unmaterialized InMemoryRelation is estimated from its source
+    // plan, so whether a join reading it plans as broadcast or
+    // sort-merge depends on the fixture size: at sf0.001 its consumers
+    // broadcast and the two sort-merge joins merge the per-document
+    // gate scores, both sides quality-pruned. Either way, no shuffle
+    // join may bypass the quality cut: every sort-merge join has the
+    // quality frame's in-memory scan in one of its child subtrees.
     assert(countNodes(p, "SortMergeJoin") <= 2, p)
+    val staticPlan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case other => other
+    }
+    def readsQualityPin(side: SparkPlan): Boolean = side.exists {
+      case s: InMemoryTableScanExec =>
+        Set("n_tokens", "dup_2gram_frac")
+          .subsetOf(s.relation.output.map(_.name).toSet)
+      case _ => false
+    }
+    staticPlan.collect { case j: SortMergeJoinExec => j }.foreach { j =>
+      assert(readsQualityPin(j.left) || readsQualityPin(j.right),
+        s"sort-merge join bypasses the pinned quality frame: " +
+          s"${j.simpleString(200)}\n$p")
+    }
     assert(!p.contains("ShuffledHashJoin"), p)
     // only the one-row vocab-size aggregate may nested-loop (q87's pin);
     // nothing data-sized cross joins

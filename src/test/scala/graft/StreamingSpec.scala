@@ -332,68 +332,6 @@ class StreamingSpec extends SparkSuite {
     assert(spark.read.parquet(corpus).count() === 4)
   }
 
-  test("ingestNearDup drops paraphrases of the corpus and collapses within-batch clusters") {
-    import spark.implicits._
-    val in = tmp("neardup-in")
-    val corpus = tmp("neardup-corpus") + "/data"
-    val ckpt = tmp("neardup-ckpt")
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
-      "doc_id LONG, text STRING")
-    def run(): Unit = graft.streaming.EventStreams
-      .ingestNearDup(spark, schema, in, corpus, ckpt, "doc_id", "text",
-        threshold = 0.6, numHashes = 16, bands = 8)
-      .awaitTermination()
-    def ids(): Set[Long] =
-      spark.read.parquet(corpus).select($"doc_id")
-        .collect().map(_.getLong(0)).toSet
-
-    // batch 1: two paraphrases of each other + one distinct doc →
-    // within-batch collapse keeps one survivor per cluster
-    Seq(
-      (10L, "alpha beta gamma delta epsilon zeta eta theta"),
-      (11L, "alpha beta gamma delta epsilon zeta eta iota"), // near-dup of 10
-      (12L, "one two three four five six seven eight"))
-      .toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(in)
-    run()
-    val s1 = ids()
-    assert(s1.size === 2 && s1.contains(12L) &&
-      (s1.contains(10L) || s1.contains(11L)), s1.toString)
-
-    // batch 2 (restart): an exact replay, a paraphrase of the corpus,
-    // and novel content — only the novel doc lands
-    Seq(
-      (20L, "alpha beta gamma delta epsilon zeta eta theta"),  // exact dup
-      (21L, "one two three four five six seven nine"),         // near-dup of 12
-      (22L, "totally different words appearing nowhere else at all"))
-      .toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(in)
-    run()
-    assert(ids() === s1 + 22L)
-  }
-
-  test("ingestNearDup: a degenerate (empty-token) doc replays without duplicating") {
-    import spark.implicits._
-    // an empty token set can never near-LINK (its Jaccard is NaN), so
-    // before the exact replay guard a crash-replayed degenerate doc
-    // re-appended on every restart; the guard drops byte-identical
-    // replays regardless of token degeneracy
-    val in = tmp("neardup-degen-in")
-    val corpus = tmp("neardup-degen-corpus") + "/data"
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
-      "doc_id LONG, text STRING")
-    def run(ck: String): Unit = graft.streaming.EventStreams
-      .ingestNearDup(spark, schema, in, corpus, ck, "doc_id", "text",
-        threshold = 0.6, numHashes = 16, bands = 8)
-      .awaitTermination()
-    Seq((1L, ""), (2L, "real words in a real document body"))
-      .toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(in)
-    run(tmp("neardup-degen-ckpt"))
-    def ids(): Set[Long] = spark.read.parquet(corpus).select($"doc_id")
-      .collect().map(_.getLong(0)).toSet
-    assert(ids() === Set(1L, 2L))
-    run(tmp("neardup-degen-ckpt2")) // full replay — zero growth
-    assert(ids() === Set(1L, 2L))
-  }
-
   test("ingestDecontaminated drops bench-overlapping docs across batches, once-computed shingles") {
     import spark.implicits._
     val in = tmp("decon-in")
@@ -577,7 +515,7 @@ class StreamingSpec extends SparkSuite {
       "NB model cache leaked after query termination")
   }
 
-  test("ingestNearDupKeyed matches ingestNearDup and keeps the key table current") {
+  test("ingestNearDupKeyed drops planted paraphrases and keeps the key table current") {
     import spark.implicits._
     val in = tmp("keyed-in")
     val corpus = tmp("keyed-corpus") + "/data"
@@ -593,8 +531,9 @@ class StreamingSpec extends SparkSuite {
       spark.read.parquet(corpus).select($"doc_id")
         .collect().map(_.getLong(0)).toSet
 
-    // same planted scenario as the ingestNearDup spec — the keyed form
-    // must behave identically while never re-hashing the corpus
+    // batch 1: two paraphrases of each other + one distinct doc →
+    // within-batch collapse keeps one survivor per cluster; the corpus
+    // is never re-hashed, only the stored key table probed
     Seq(
       (10L, "alpha beta gamma delta epsilon zeta eta theta"),
       (11L, "alpha beta gamma delta epsilon zeta eta iota"), // near-dup of 10
@@ -605,6 +544,8 @@ class StreamingSpec extends SparkSuite {
     assert(s1.size === 2 && s1.contains(12L) &&
       (s1.contains(10L) || s1.contains(11L)), s1.toString)
 
+    // batch 2 (restart): an exact replay, a paraphrase of the corpus,
+    // and novel content — only the novel doc lands
     Seq(
       (20L, "alpha beta gamma delta epsilon zeta eta theta"),  // exact dup
       (21L, "one two three four five six seven nine"),         // near-dup of 12

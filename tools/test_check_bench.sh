@@ -160,6 +160,26 @@ rc=0; python3 tools/check_bench.py compare /tmp/cbtest_noprobe.json \
   /tmp/cbtest_probed.json >/dev/null 2>&1 || rc=$?
 test "$rc" -eq 0 || { echo "raw compare: expected 0, got $rc"; exit 1; }
 
+# q106b rows carry the r15 needle-cap note; the note changes neither the
+# classification nor the exit code (a 10x "improvement" stays one)
+py <<'EOF'
+import json
+json.dump({"queries": {"q106b_verbatim_leak_contains": 5.0, "q_a": 0.5}},
+          open("/tmp/cbtest_q106b_old.json", "w"))
+json.dump({"queries": {"q106b_verbatim_leak_contains": 0.5, "q_a": 0.5}},
+          open("/tmp/cbtest_q106b_new.json", "w"))
+EOF
+rc=0; out=$(python3 tools/check_bench.py compare /tmp/cbtest_q106b_old.json \
+  /tmp/cbtest_q106b_new.json 2>"$W/q106b.err") || rc=$?
+test "$rc" -eq 0 || { echo "q106b note: expected exit 0, got $rc"; exit 1; }
+grep -q "q106b_verbatim_leak_contains: r15 capped .*not comparable" "$W/q106b.err" \
+  || { echo "q106b note: missing"; cat "$W/q106b.err"; exit 1; }
+echo "$out" | grep -q '"class": "improvement"' \
+  || { echo "q106b note: classification changed"; echo "$out"; exit 1; }
+if grep -q "q_a" "$W/q106b.err"; then
+  echo "q106b note: printed for another query"; exit 1
+fi
+
 # baseline pick: round tag order, never mtime; prefer finals; never a
 # rerun line; never the excluded round; empty -> exit 1
 PICKDIR="$W/bh"; mkdir -p "$PICKDIR"
@@ -205,4 +225,4 @@ rm "$PICKDIR"/r*.json
 rc=0; python3 tools/pick_prev_bench.py "$PICKDIR" r10 >/dev/null || rc=$?
 test "$rc" -eq 1 || { echo "empty pick: expected exit 1, got $rc"; exit 1; }
 
-echo "check_bench anomaly exit contract: 0/1/2/3 + error-gap + crash=3 + scale-block coverage verified; compare normalize-impossible=3; baseline pick by round tag verified"
+echo "check_bench anomaly exit contract: 0/1/2/3 + error-gap + crash=3 + scale-block coverage verified; compare normalize-impossible=3 + q106b cap note; baseline pick by round tag verified"
