@@ -45,6 +45,16 @@ object GraftSession {
       // on a driver that budgets GBs for broadcasts.
       .config("spark.sql.codegen.cache.maxEntries", "5000")
       .config("spark.ui.enabled", "false")
+      .config(LocalFileSystemConf)
+
+  /** Writes on `file:` paths go through [[graft.io.NioLocalFileSystem]],
+    * which sets permissions without forking `chmod` per created file and
+    * directory (the stock local filesystem forks when libhadoop's native
+    * IO is missing). A session default, not an option: the permissions
+    * it sets are the stock filesystem's.
+    */
+  val LocalFileSystemConf: Map[String, String] = Map(
+    "spark.hadoop.fs.file.impl" -> classOf[graft.io.NioLocalFileSystem].getName)
 
   /** Local session sized by SPARK_GRAFT_CPUS (the shape Verify/Bench and
     * the CLI run with; SPARK_MASTER overrides for a real cluster).

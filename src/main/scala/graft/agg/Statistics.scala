@@ -104,7 +104,9 @@ object Statistics {
     * `listFiles(root, true)`: on the local filesystem without native IO
     * every `LocatedFileStatus` that `listFiles` builds loads its
     * permissions by forking `ls` (Spark's own `HadoopFSUtils` avoids that
-    * constructor for the same reason).
+    * constructor for the same reason). The sessions' fork-free local
+    * filesystem ([[graft.io.NioLocalFileSystem]]) does not cover this:
+    * it replaces only the `chmod` forks of permission WRITES.
     */
   def listParquetFilesRaw(spark: org.apache.spark.sql.SparkSession,
       dir: String): Seq[(String, String, Long)] = {

@@ -3,7 +3,7 @@ package graft.enrich
 import java.sql.Timestamp
 import java.util.concurrent.{Executors, TimeUnit, TimeoutException}
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.{DataFrame, Encoders, Observation, Row}
 import org.apache.spark.sql.functions._
 
 import graft.model.MediaSchema
@@ -70,25 +70,51 @@ object Enricher {
       org.apache.spark.sql.types.StructField("__dead", org.apache.spark.sql.types.BooleanType),
       org.apache.spark.sql.types.StructField("__reason", org.apache.spark.sql.types.StringType)))
 
-  /** Result pair: `records` follow MediaSchema.superset; `deadLetter`
-    * follows [[deadLetterSchema]] (reason ∈ timeout | max_attempts).
+  /** One batch's enrichment pass, split two ways: `records` follow
+    * MediaSchema.superset; `deadLetter` follows [[deadLetterSchema]]
+    * (reason ∈ timeout | max_attempts). [[recordsCounted]] is `records`
+    * with the batch's counters observed ahead of the split, so one sink
+    * job tells the caller whether `deadLetter` holds any row.
     *
-    * The two frames share one persisted enrichment pass; call
-    * [[Enriched.release]] after BOTH have been consumed (their sink jobs
-    * completed) — otherwise every batch leaks a CacheManager entry (plus
-    * any disk-spilled blocks) for the application's lifetime, which a
-    * long [[graft.pipeline.Pipelines.processAll]] run turns into
-    * unbounded storage growth.
+    * Both frames read one persisted enrichment pass; call [[release]]
+    * after every sink that reads them has run — otherwise every batch
+    * leaks a CacheManager entry (plus any disk-spilled blocks) for the
+    * application's lifetime, which a long
+    * [[graft.pipeline.Pipelines.processAll]] run turns into unbounded
+    * storage growth.
     */
-  case class Enriched(records: DataFrame, deadLetter: DataFrame,
-      private val unified: DataFrame,
-      private val pins: Seq[DataFrame] = Nil) {
-    def release(): Unit = {
-      unified.unpersist(blocking = false)
-      pins.foreach(_.unpersist(blocking = false))
-      ()
+  final class Enriched private[enrich] (pass: DataFrame,
+      cached: Seq[DataFrame]) {
+    lazy val records: DataFrame = recordsOf(pass)
+    lazy val deadLetter: DataFrame = pass.where(col("__dead")).select(
+      col("url"), col("batch_index").as("index"),
+      col("__reason").as("reason"), col("processing_time"),
+      col("attempt").as("attempts"))
+
+    /** [[records]], whose sink job also fills `counts` over the WHOLE
+      * pass, dead rows included: `produced` (records), `errors` (the
+      * records' failed attempts, `attempt - 1` each), `dead` (dead
+      * letters) and `dead_attempts` (their attempts, all failed). The
+      * observation sits below the `__dead` split, and the optimizer
+      * pushes no filter through it, so the records' write alone counts
+      * the dead letters too.
+      */
+    def recordsCounted(counts: Observation): DataFrame = {
+      val dead = col("__dead")
+      recordsOf(pass.observe(counts,
+        count(when(!dead, 1)).as("produced"),
+        coalesce(sum(when(!dead, col("attempt") - 1)), lit(0L)).as("errors"),
+        count(when(dead, 1)).as("dead"),
+        coalesce(sum(when(dead, col("attempt"))), lit(0L))
+          .as("dead_attempts")))
     }
+
+    def release(): Unit = cached.foreach(_.unpersist(blocking = false))
   }
+
+  private def recordsOf(pass: DataFrame): DataFrame =
+    pass.where(!col("__dead"))
+      .select(MediaSchema.superset.fieldNames.map(col).toSeq: _*)
 
   /** Enrich a URL dataset. Input must have a `url` string column; a stable
     * `batch_index` is assigned as `startIndex + rank` in `url` order —
@@ -152,14 +178,8 @@ object Enricher {
     // pass as its own query stage (a TableCacheQueryStage) before the
     // coalesced read: without AQE, coalesce(1) would pull the whole
     // fetch into the one write task (PipelineSpec pins the fetch width).
-    val sinkSide = if (windowed) unified.coalesce(1) else unified
-    val records = sinkSide.where(!col("__dead"))
-      .select(MediaSchema.superset.fieldNames.map(col).toSeq: _*)
-    val dead = sinkSide.where(col("__dead")).select(
-      col("url"), col("batch_index").as("index"),
-      col("__reason").as("reason"), col("processing_time"),
-      col("attempt").as("attempts"))
-    Enriched(records, dead, unified, pins)
+    new Enriched(if (windowed) unified.coalesce(1) else unified,
+      unified +: pins)
   }
 
   /** The `maxRecords`-contract check behind `Config.windowIndexMaxRows`:

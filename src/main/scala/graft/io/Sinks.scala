@@ -33,7 +33,13 @@ object Sinks {
       .write.mode("overwrite").option("header", true).csv(path)
 
   /** K6: dead-letter JSON side output
-    * (reference test_parquet_processor.py:336-349).
+    * (reference test_parquet_processor.py:336-349). The processors
+    * append only a batch that has dead letters: an empty append still
+    * pays a full write (planning, a job, a commit, `_SUCCESS`) and
+    * leaves an empty part file. So `dir` may be absent when no batch
+    * dead-lettered anything; readers take that as no dead letters (a
+    * directory of only empty JSON files could not be read without a
+    * schema either).
     */
   def deadLetterJson(df: DataFrame, dir: String): Unit =
     df.write.mode("append").json(dir)

@@ -55,40 +55,37 @@ object Pipelines {
     val enriched = Enricher.enrich(slice, fetcherFactory,
       enrichConfig.copy(startIndex = cur.nextIndex))
 
-    // A11 running counters ride on the sink jobs as observed metrics
-    // (df.observe) instead of separate count() jobs. A batch runs four
-    // jobs, all in the cancellable group below (PipelineSpec pins the
-    // count with a SparkListener): (1) the shuffle-map stage of the
-    // slice + row_number window ahead of the enrichment's repartition,
-    // (2) the fetch pass that fills the cached enrichment, one task per
-    // fetch partition, (3) the shard write and (4) the dead-letter
-    // write, one task and one file each. The url list reads with a
+    // A11 running counters ride on the shard write as one observation
+    // on the enrichment pass ahead of its records/dead-letter split
+    // (Enriched.recordsCounted) instead of separate count() jobs. A
+    // batch runs three jobs, all in the cancellable group below
+    // (PipelineSpec pins the count with a SparkListener): (1) the
+    // shuffle-map stage of the slice + row_number window ahead of the
+    // enrichment's repartition, (2) the fetch pass that fills the cached
+    // enrichment, one task per fetch partition, and (3) the shard write,
+    // one task and one file. The dead-letter write (a fourth one-task
+    // job and file) runs only when the observation counted a dead
+    // letter: an empty append still pays planning, a job, a commit and
+    // a _SUCCESS marker, and most batches have no dead letter. So
+    // `dead_letter/` holds one part file per batch that had dead
+    // letters, and is absent while none had. The url list reads with a
     // pinned schema (no inference job), the slice's limit proves the
     // window bound statically (no probe job), and the window's one
     // partition is known, not probed, when the fetch is spread.
     // error_count follows the reference's semantics: every failed ATTEMPT
     // counts, including transient failures that later succeeded (attempt>1
     // means attempt-1 failures) and every attempt behind a dead letter.
-    val recObs = org.apache.spark.sql.Observation()
-    val deadObs = org.apache.spark.sql.Observation()
-    graft.GraftSession.runCancellable(spark, "graft-processor",
-        s"enrich [${cur.nextIndex}, ${cur.nextIndex + take})") {
-      Sinks.appendParquet(
-        enriched.records.observe(recObs,
-          count(lit(1)).as("produced"),
-          coalesce(sum(col("attempt") - 1), lit(0L)).as("errors")),
-        s"$outDir/shards")
-      Sinks.deadLetterJson(
-        enriched.deadLetter.observe(deadObs, count(lit(1)).as("dead"),
-          coalesce(sum(col("attempts")), lit(0L)).as("dead_attempts")),
-        s"$outDir/dead_letter")
+    val counts = org.apache.spark.sql.Observation()
+    val (produced, errors, dead) = graft.GraftSession.runCancellable(spark,
+        "graft-processor", s"enrich [${cur.nextIndex}, ${cur.nextIndex + take})") {
+      Sinks.appendParquet(enriched.recordsCounted(counts), s"$outDir/shards")
+      val m = counts.get
+      def n(key: String) = m(key).asInstanceOf[Long]
+      if (n("dead") > 0)
+        Sinks.deadLetterJson(enriched.deadLetter, s"$outDir/dead_letter")
+      (n("produced"), n("errors") + n("dead_attempts"), n("dead"))
     }
-
-    val produced = recObs.get("produced").asInstanceOf[Long]
-    val errors = recObs.get("errors").asInstanceOf[Long] +
-      deadObs.get("dead_attempts").asInstanceOf[Long]
-    val dead = deadObs.get("dead").asInstanceOf[Long]
-    // both sink jobs are done (observations resolved) — drop the batch's
+    // the sink jobs are done (observation resolved) — drop the batch's
     // cached enrichment pass, or processAll leaks one cache entry per batch
     enriched.release()
     val consumed = produced + dead

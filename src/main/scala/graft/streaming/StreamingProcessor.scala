@@ -9,7 +9,8 @@ import graft.io.Sinks
 
 /** Structured-Streaming twin of `pipeline.Pipelines.processor` (T1–T4):
   * URL-list files land in a directory; each micro-batch enriches its
-  * slice and appends shard parquet + dead-letter JSON.
+  * slice and appends shard parquet, plus dead-letter JSON when it has
+  * dead letters.
   *
   * The cursor (T2) is the streaming checkpoint: file offsets are
   * committed after each batch, so a restart resumes exactly where the
@@ -61,15 +62,22 @@ object StreamingProcessor {
           if (exactlyOnce) {
             enriched.records.write.mode("overwrite")
               .parquet(s"$outDir/shards/micro_batch_id=$batchId")
+            // overwritten even when the batch has no dead letter: a batch
+            // replayed after a failed attempt must clear the dead
+            // letters that attempt left in its partition
             enriched.deadLetter.write.mode("overwrite")
               .json(s"$outDir/dead_letter/micro_batch_id=$batchId")
           } else {
-            Sinks.appendParquet(
-              enriched.records.withColumn("micro_batch_id", lit(batchId)),
+            // dead letters append only when the batch has any, counted
+            // by the shard write (the batch processor's rule)
+            val counts = org.apache.spark.sql.Observation()
+            Sinks.appendParquet(enriched.recordsCounted(counts)
+                .withColumn("micro_batch_id", lit(batchId)),
               s"$outDir/shards")
-            Sinks.deadLetterJson(
-              enriched.deadLetter.withColumn("micro_batch_id", lit(batchId)),
-              s"$outDir/dead_letter")
+            if (counts.get("dead").asInstanceOf[Long] > 0)
+              Sinks.deadLetterJson(
+                enriched.deadLetter.withColumn("micro_batch_id", lit(batchId)),
+                s"$outDir/dead_letter")
           }
         } finally enriched.release() // else one cache entry leaks per batch
         ()

@@ -411,6 +411,27 @@ class PipelineSpec extends SparkSuite {
       c2.skippedCount === 200L)
   }
 
+  test("a batch's cursor counts its dead letters from the shard write's observation") {
+    val urlPath = writeUrlList(100)
+    val out = Files.createTempDirectory("graft-counted").toString
+    // md5 prefix "0" dead-letters ~1/16 of the urls; suffix "f" fails
+    // ~1/16 once before they succeed
+    val c = Pipelines.processor(spark, urlPath, out,
+      () => new SyntheticFetcher(alwaysFailPrefix = "0"), maxRecords = 100,
+      cursorPath = s"$out/cursor.txt", totalTarget = 100,
+      enrichConfig = fastEnrich)
+    import org.apache.spark.sql.functions._
+    val shards = Sources.parquetTreeMerged(spark, s"$out/shards")
+    val dead = spark.read.json(s"$out/dead_letter")
+    val retries = shards.agg(sum(col("attempt") - 1)).first().getLong(0)
+    val deadAttempts = dead.agg(sum(col("attempts"))).first().getLong(0)
+    assert(c.skippedCount > 0 && retries > 0,
+      "the batch must dead-letter some urls and retry others")
+    assert(c.skippedCount === dead.count())
+    assert(c.errorCount === retries + deadAttempts)
+    assert(c.totalProcessed === shards.count() + dead.count())
+  }
+
   test("aggregator sizes combined parts by bytes, floored at min(files, cores)") {
     val out = Files.createTempDirectory("graft-sinks").toString
     writeShards(s"$out/shards", 12)
@@ -443,10 +464,11 @@ class PipelineSpec extends SparkSuite {
     check(small, s"$out/agg6", 6)
   }
 
-  test("processor batch runs 4 jobs; aggregator jobs don't grow per shard") {
+  test("processor batch runs 3 jobs; aggregator jobs don't grow per shard") {
     // pins the per-batch and per-file fixed cost: a job per batch for
-    // url-list schema inference or the window-bound probe, or a job per
-    // shard file for contract validation, shows up here
+    // url-list schema inference or the window-bound probe, an empty
+    // dead-letter write, or a job per shard file for contract
+    // validation, shows up here
     val urlPath = writeUrlList(100)
     val out = Files.createTempDirectory("graft-jobs").toString
     val (c, batchJobs) = jobsDuring(Pipelines.processor(spark, urlPath, out,
@@ -454,9 +476,12 @@ class PipelineSpec extends SparkSuite {
       cursorPath = s"$out/cursor.txt", totalTarget = 100,
       enrichConfig = fastEnrich))
     assert(c.totalProcessed === 100)
+    assert(c.skippedCount === 0, "this url list must have no dead letter")
     // the slice's shuffle map stage, the fetch pass into the cached
-    // enrichment, the shard write and the dead-letter write
-    assert(batchJobs === 4)
+    // enrichment and the shard write; no dead letter, no dead-letter
+    // write and no dead-letter file
+    assert(batchJobs === 3)
+    assert(!new java.io.File(s"$out/dead_letter").exists)
     def aggJobs(files: Int): Int = {
       val dir = Files.createTempDirectory("graft-aggjobs").toString
       writeShards(s"$dir/shards", files)

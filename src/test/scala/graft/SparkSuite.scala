@@ -15,6 +15,9 @@ object TestSpark {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // the sessions' fork-free local filesystem, so every spec writes
+      // through the filesystem production runs use
+      .config(GraftSession.LocalFileSystemConf)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -100,6 +100,39 @@ class StreamingSpec extends SparkSuite {
       Array("http://a/1", "http://a/2", "http://a/3"))
   }
 
+  test("StreamingProcessor appends dead letters only for a micro-batch that has any") {
+    import spark.implicits._
+    val in = tmp("sp-dl-in")
+    val out = tmp("sp-dl-out")
+    val ckpt = tmp("sp-dl-ckpt")
+    // md5 prefix "0" dead-letters a url: split candidates by that rule
+    def md5(s: String) = java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    val (doomed, live) = (1 to 100).map(i => s"http://d/$i")
+      .partition(md5(_).startsWith("0"))
+    def offer(urls: Seq[String]): Unit =
+      Seq(urls.map(u => s"""{"url": "$u"}""").mkString("[", ",", "]"))
+        .toDF("value").coalesce(1).write.mode("append").text(in)
+    def run(): Unit = graft.streaming.StreamingProcessor.start(spark, in,
+      out, ckpt, () => new graft.enrich.SyntheticFetcher(alwaysFailPrefix = "0"),
+      graft.enrich.Enricher.Config(backoffMs = 1)).awaitTermination()
+    def deadFiles = Option(new java.io.File(s"$out/dead_letter").listFiles())
+      .getOrElse(Array.empty).count(_.getName.startsWith("part-"))
+
+    offer(live.take(3))
+    run()
+    assert(spark.read.parquet(s"$out/shards").count() === 3)
+    assert(deadFiles === 0)
+
+    offer(Seq(doomed.head, live(3)))
+    run()
+    assert(spark.read.parquet(s"$out/shards").count() === 4)
+    assert(deadFiles === 1)
+    val dead = spark.read.json(s"$out/dead_letter")
+      .select($"url", $"micro_batch_id").as[(String, Long)].collect()
+    assert(dead.toSeq === Seq((doomed.head, 1L)))
+  }
+
   test("streamingDedup drops in-watermark duplicates across micro-batches") {
     import spark.implicits._
     val in = tmp("dedup-in")
